@@ -6,11 +6,22 @@ of malformed frames. The generator returns the counts a correct run
 must reproduce, so the benchmark checks the engine's outputs against
 them instead of against a second implementation of the decoders.
 
-Malformed frames are built from a valid request frame and broken at
-the IPv4 layer in one of three ways: truncated mid-header, a flipped
-version bit, or a total-length field that lies (claims a bare
-header). Each of them must leave no L4 unit and no decoded row, so
-``frames = decoded + errors`` holds with ``errors`` = malformed.
+Malformed frames come in two layers, in equal shares:
+
+- broken at IPv4, built from a valid request frame: truncated
+  mid-header, a flipped version bit, or a total-length field that
+  lies (claims a bare header). They must leave no L4 unit.
+- broken in the application message, sent on a stream or flow of its
+  own so no reassembler can join it to a good message: a message
+  cut below its fixed header, a wrong protocol version, or (Diameter)
+  a length field that claims more bytes than follow, or (HTTP) bytes
+  that start no request or response. They reach the decoder as L4
+  units and must decode to no message. The ledger's reading of the
+  decode stage should count each of them as not processed; the
+  counts carry that figure as ``not_processed``.
+
+So ``frames = decoded + errors`` holds with ``errors`` = malformed,
+and ``segments = decoded + not_processed``.
 """
 
 from __future__ import annotations
@@ -23,7 +34,13 @@ from dataclasses import dataclass, field
 from ingestor_etl_spark import capturegen as g
 
 FAMILIES = ("diameter", "gsm_map", "gtp", "sip", "smpp", "http_ocs")
-MALFORMED_KINDS = ("truncated", "bitflip", "badlen")
+IP_KINDS = ("ip_truncated", "ip_bitflip", "ip_badlen")
+APP_KINDS = {
+    "diameter": ("short", "badversion", "badlen"),
+    "gtp": ("short", "badversion"),
+    "http_ocs": ("short", "nostart"),
+}
+MALFORMED_KINDS = IP_KINDS + ("short", "badversion", "badlen", "nostart")
 
 _CLIENT, _SERVER = "10.0.0.1", "10.0.0.2"
 
@@ -36,6 +53,7 @@ class Counts:
     frames: int = 0
     msgs: int = 0  # decodable messages = good frames
     malformed: int = 0
+    not_processed: int = 0  # malformed frames that reach the decoder
     requests: int = 0
     matched: int = 0  # requests with an answer
     by_kind: dict = field(default_factory=lambda: dict.fromkeys(MALFORMED_KINDS, 0))
@@ -45,7 +63,7 @@ class Counts:
         return self.requests - self.matched
 
     def add(self, other: "Counts") -> None:
-        for name in ("files", "frames", "msgs", "malformed", "requests", "matched"):
+        for name in ("files", "frames", "msgs", "malformed", "not_processed", "requests", "matched"):
             setattr(self, name, getattr(self, name) + getattr(other, name))
         for k, v in other.by_kind.items():
             self.by_kind[k] += v
@@ -164,16 +182,41 @@ _BUILDERS = {
 }
 
 
-def _malform(frame: bytes, kind: str) -> bytes:
+def _malform_ip(frame: bytes, kind: str) -> bytes:
     ip = 14  # Ethernet header length
-    if kind == "truncated":
+    if kind == "ip_truncated":
         return frame[: ip + 12]
     out = bytearray(frame)
-    if kind == "bitflip":
+    if kind == "ip_bitflip":
         out[ip] ^= 0x20  # version 4 -> 6
-    else:  # badlen: total length claims a bare 20-byte header
+    else:  # ip_badlen: total length claims a bare 20-byte header
         out[ip + 2 : ip + 4] = struct.pack("!H", 20)
     return bytes(out)
+
+
+def _bad_diameter(i: int, kind: str) -> bytes:
+    msg = g.diameter_msg(272, True, i, i, [g.diameter_avp(263, f"bad;{i}".encode())])
+    if kind == "short":
+        msg = msg[:12]
+    elif kind == "badversion":
+        msg = b"\x02" + msg[1:]
+    else:  # badlen: claims 64 bytes more than the message holds
+        msg = msg[:1] + (len(msg) + 64).to_bytes(3, "big") + msg[4:]
+    return _ip(g.sctp([(1000 + i, 0, 46, msg)], 40001, 3868), 132, False)
+
+
+def _bad_gtp(i: int, kind: str) -> bytes:
+    msg = g.gtpv2(32, 0, i, g.gtpv2_ie(1, g.tbcd("334020000000000")))
+    msg = msg[:6] if kind == "short" else b"\x68" + msg[1:]  # version 3
+    return _ip(g.udp(msg, 40000, 2123), 17, False)
+
+
+def _bad_http_ocs(i: int, kind: str) -> bytes:
+    body = b"POS" if kind == "short" else b"\x16\x03\x01\x00\x2a" + bytes(range(42))
+    return _ip(g.tcp(body, 20000 + i, 8080, seq=7 * i, ack=11 * i, flags=24), 6, False)
+
+
+_BAD_APP = {"diameter": _bad_diameter, "gtp": _bad_gtp, "http_ocs": _bad_http_ocs}
 
 
 def capture(family: str, seed: int, fno: int, n_txn: int,
@@ -192,8 +235,13 @@ def capture(family: str, seed: int, fno: int, n_txn: int,
             frames.append(ans)
             c.matched += 1
         if rng.random() < malformed_per_txn:  # ~2% of frames
-            kind = MALFORMED_KINDS[rng.randrange(len(MALFORMED_KINDS))]
-            frames.append(_malform(req, kind))
+            kinds = IP_KINDS + APP_KINDS.get(family, ())
+            kind = kinds[rng.randrange(len(kinds))]
+            if kind in IP_KINDS:
+                frames.append(_malform_ip(req, kind))
+            else:
+                frames.append(_BAD_APP[family](i, kind))
+                c.not_processed += 1
             c.by_kind[kind] += 1
             c.malformed += 1
     c.msgs = c.requests + c.matched

@@ -16,7 +16,7 @@ from querymix import QUERIES
 NAMES = (
     ["sources.frames", "sources.self_s", "net.segments", "net.self_s"]
     + [f"decode.{f}.self_s" for f in FAMILIES]
-    + ["decode.msgs", "decode.errors"]
+    + ["decode.msgs", "decode.errors", "decode.dropped"]
     + [f"operators.{f}.self_s" for f in FAMILIES]
     + ["operators.matched", "operators.unmatched", "shuffle_bytes", "gc_s",
        "sinks.parquet.self_s", "sinks.ledger.self_s",
@@ -32,7 +32,7 @@ NAMES = (
 def unit(name: str) -> str:
     if name == "shuffle_bytes":
         return "bytes"
-    if name.endswith("_s") or name.endswith("_p50"):
+    if name.endswith("_s") or "_s_" in name:
         return "s"
     return "count"
 

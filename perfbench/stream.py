@@ -27,6 +27,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import statistics
 import threading
 import time
 
@@ -160,11 +161,11 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
     land_file(warm, t_start)
     warm_ok = progress.wait_files(1, COMMIT_TIMEOUT_S)
     t0 = time.time() + 0.5
+    t_burst = t0 + n_paced * PACED_INTERVAL_S
 
     def generator() -> None:
         for i, name in enumerate(paced):
             land_file(name, t0 + i * PACED_INTERVAL_S)
-        t_burst = t0 + n_paced * PACED_INTERVAL_S
         while (wait := t_burst - time.time()) > 0:
             time.sleep(min(wait, 0.01))
         for name in burst:
@@ -173,10 +174,10 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
         late.append(time.time() - t_burst)
 
     gen = threading.Thread(target=generator, name="perfbench-generator")
-    if warm_ok:
-        gen.start()
-        gen.join()
+    gen.start()
+    gen.join()
     drained = progress.wait_files(len(due), COMMIT_TIMEOUT_S)
+    t_end = time.time()
     t_stop = time.perf_counter()
     query.stop()
     stop_s = time.perf_counter() - t_stop
@@ -190,15 +191,18 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
     batch_of = {n: batch_at[o] for n, o in offset_of.items() if o in batch_at}
     end_of = {n: batches[b]["end"] for n, b in batch_of.items() if b in batches}
     committed = [n for n in due if n in end_of]
-    fresh = {n: end_of[n] - due[n] for n in committed}
-    paced_fresh = [fresh[n] for n in paced if n in fresh]
-    burst_msgs = sum(counts[n].msgs for n in burst)
+    # a file not committed when the run ends counts as fresh at the
+    # end: a lower bound, so a run that loses files still reports
+    fresh = {n: end_of.get(n, t_end) - due[n] for n in due}
+    paced_fresh = [fresh[n] for n in paced]
+    burst_msgs = sum(counts[n].msgs for n in burst if n in end_of)
     burst_batches = {batch_of[n] for n in burst if n in batch_of}
     # the burst's processing time: its batches' durations, without the
-    # wait for the no-data batch in flight when the files landed
+    # wait for the no-data batch in flight when the files landed; the
+    # time from landing to the end of the run if any burst file is lost
     drain_s = sum(batches[b]["end"] - batches[b]["start"] for b in burst_batches)
-    if len(committed) < len(due):
-        drain_s = None
+    if any(n not in end_of for n in burst):
+        drain_s = t_end - t_burst
 
     paced_batches = sorted({batch_of[n] for n in paced if n in batch_of})
     data_batches = [b for b in batches.values() if b["files"] > 0]
@@ -211,19 +215,22 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
     def ms(rec, *keys):
         return sum(rec["ms"].get(k, 0) for k in keys) / 1000.0
 
-    tail_pct, tail_s, n_fresh = tail(paced_fresh) if paced_fresh else (0.0, 0.0, 0)
+    tail_pct, tail_s, n_fresh = tail(paced_fresh)
     return {
         "landed": len(due),
         "stop_s": stop_s,
         "committed": len(committed),
+        "uncommitted": [n for n in due if n not in end_of],
+        "warm_committed": warm_ok,
         "warm_file_s": fresh.get(warm),
         "paced_files": len(paced),
         "freshness_s": {n: round(v, 4) for n, v in fresh.items()},
-        "freshness_p50_s": median(paced_fresh) if paced_fresh else None,
+        "freshness_p50_s": median(paced_fresh),
+        "freshness_mean_s": statistics.fmean(paced_fresh),
         "freshness_tail": {"percentile": tail_pct, "value_s": tail_s, "n": n_fresh},
         "burst_msgs": burst_msgs,
         "drain_s": drain_s,
-        "drain_msgs_per_s": burst_msgs / drain_s if drain_s else None,
+        "drain_msgs_per_s": burst_msgs / drain_s,
         "expected_msgs": sum(counts[n].msgs for n in due),
         "expected_files": len(due),
         "drained": drained,

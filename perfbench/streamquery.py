@@ -1,4 +1,4 @@
-"""stream_query: the query mix, then streaming ingest (paced, then
+"""stream_query: the query phase, then streaming ingest (paced, then
 burst), in one session.
 
 The two phases share a workload so that a run fits the time a run
@@ -21,7 +21,7 @@ def _run(sess: Session, work: str, seed: int, seconds: float, traced: bool):
     clock = [time.perf_counter()]
     setup_s = sess.start_repeated()
     clock.append(time.perf_counter())
-    qm = querymix.run_phase(sess, work, seed, group="query" if traced else None)
+    qm = querymix.run_phase(sess, group="query" if traced else None)
     clock.append(time.perf_counter())
     st = stream.run_phase(sess, work, seed, seconds)
     clock.append(time.perf_counter())
@@ -37,14 +37,14 @@ def _run(sess: Session, work: str, seed: int, seconds: float, traced: bool):
         "cold_s": qm["cold_s"],
         "steady_s": qm["steady_s"],
         "rate_per_s": st["drain_msgs_per_s"],
-        "latency_p50_s": st["freshness_p50_s"],
+        "latency_mean_s": st["freshness_mean_s"],
     }
     detail = {
         "meaning": {
-            "cold_s": "query mix: sum of build + first execution",
-            "steady_s": "query mix: sum of per-query median steady execution",
+            "cold_s": "query phase: sum of build + first execution",
+            "steady_s": "query phase: sum of per-query median steady execution",
             "rate_per_s": "burst messages per second of the batches that read them",
-            "latency_p50_s": "median freshness of paced files (landing to commit)",
+            "latency_mean_s": "mean freshness of paced files (landing to commit)",
         },
         "stream": {k: v for k, v in st.items() if k not in ("ledger_expected",)},
         "queries": qm["queries"],
