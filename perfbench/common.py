@@ -122,12 +122,16 @@ class Session:
         self.setup_times.append(took)
         return took
 
-    def start_repeated(self, n: int = SETUP_REPEATS) -> float:
-        """Set up ``n`` times (the first pays the JVM launch) and
-        return the median; the last session stays open."""
-        for _ in range(n):
+    def setup_median(self, n: int = SETUP_REPEATS) -> float:
+        """Set up again until there are ``n`` samples and return their
+        median (the first pays the JVM launch); the last session stays
+        open. Called after the timed work, so the cold figures are
+        taken in the session the JVM launch made, as a one-shot CLI
+        run takes them, and not beside stopped sessions still winding
+        down."""
+        while len(self.setup_times) < n:
             self.start()
-        return median(self.setup_times[-n:])
+        return median(self.setup_times[:n])
 
     def job_group(self, name: str) -> None:
         self.spark.sparkContext.setJobGroup(name, name)

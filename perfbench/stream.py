@@ -1,25 +1,38 @@
-"""Streaming phase: the CLI ``--streaming`` composition, open loop.
+"""Streaming phase: the CLI ``--streaming`` composition.
 
 The composition is ``stream_frames`` -> ``expand_l4`` ->
 ``stream_decode_diameter`` -> ``write_stream_with_ledger`` with the
 default trigger, exactly as ``python -m ingestor_etl_spark
 --streaming`` builds it. A generator thread lands Diameter captures
-by atomic rename on a fixed schedule that does not wait for the
-engine:
+by atomic rename:
 
 - one warm-up file, whose batch pays the first-batch cost;
-- a paced phase, one file every ``PACED_INTERVAL_S``, longer than a
-  data batch plus the no-data batch it may have to wait for, so each
-  file gets its own micro-batch and freshness has a single peak;
+- a paced phase: one file at a time, each landed once the previous
+  one is committed, so each file gets its own micro-batch and
+  freshness has a single peak;
 - a burst phase, ``BURST_FILES`` files landed at once; its rate is
   the burst's messages over the durations of the batches that read it.
 
+The stateful decode uses a processing-time timeout, so the engine
+runs no-data micro-batches back to back, and a landed file waits for
+the one in flight to end before a batch reads it. That wait is part
+of freshness, spread evenly between zero and a no-data batch's length
+for files landing at random times. Left to chance, six such waits
+make a mean whose standard deviation is an eighth of a no-data batch.
+So the paced files land at evenly spread points of the batch in
+flight instead: file ``i`` of ``n`` lands ``PACED_MARGIN_S`` plus the
+fraction ``(i + 0.5) / n`` of a no-data batch's median length less
+two margins after the latest batch ended (and the batch in flight
+started). The margins keep each landing after the batch in flight
+has listed its files and before it ends, so a file never races the
+listing of either batch and its wait has one peak. When no no-data
+batches run, no batch is in flight, and paced files land at once.
+
 Freshness runs from a file's scheduled landing time to the end of
 the micro-batch that committed it; the file-to-batch map is read from
-the file source's offset log in the checkpoint. The stateful decode
-uses a processing-time timeout, so the engine runs no-data batches
-back to back and ``processAllAvailable()`` never returns; the drain
-therefore waits until every landed file is committed.
+the file source's offset log in the checkpoint. Because of the no-data
+batches ``processAllAvailable()`` never returns, so the drain waits
+until every landed file is committed.
 """
 
 from __future__ import annotations
@@ -34,13 +47,15 @@ import time
 from capgen import capture
 from common import median, tail
 
-PACED_INTERVAL_S = 3.5
-PACED_FILE_PER_S = 4.0  # one paced file per this many seconds of the run
-MIN_PACED_FILES = 5
-BURST_FILES = 16  # one micro-batch at the source's 16 files per trigger
+PACED_FILE_PER_S = 3.0  # one paced file per this many seconds of the run
+MIN_PACED_FILES = 6
+PACED_MARGIN_S = 0.25  # landings keep this far from the ends of the batch in flight
+NODATA_SAMPLES = 1  # no-data batches seen before pacing, for their median length
+NODATA_WAIT_S = 10.0  # no no-data batch by then: the engine runs none
+BURST_FILES = 32  # two micro-batches at the source's 16 files per trigger
 TXN_PACED = 100
 TXN_BURST = 250
-COMMIT_TIMEOUT_S = 45.0
+COMMIT_TIMEOUT_S = 30.0
 
 
 def _epoch(iso: str) -> float:
@@ -89,13 +104,33 @@ class Progress:
         return _L()
 
     def wait_files(self, n: int, timeout: float) -> bool:
+        return self._wait(lambda: self.files_committed >= n, timeout)
+
+    def wait_batches(self, n: int, timeout: float) -> bool:
+        return self._wait(lambda: len(self.batches) >= n, timeout)
+
+    def wait_nodata(self, n: int, timeout: float) -> bool:
+        return self._wait(lambda: sum(b["files"] == 0 for b in self.batches) >= n, timeout)
+
+    def _wait(self, done, timeout: float) -> bool:
         deadline = time.time() + timeout
         while time.time() < deadline:
             with self.lock:
-                if self.files_committed >= n:
+                if done():
                     return True
-            time.sleep(0.05)
+            time.sleep(0.01)
         return False
+
+    def latest(self) -> tuple[int, float]:
+        """(number of batches seen, end of the latest one)."""
+        with self.lock:
+            return len(self.batches), self.batches[-1]["end"] if self.batches else time.time()
+
+    def nodata_s(self) -> float:
+        """Median length of the no-data batches seen so far."""
+        with self.lock:
+            ds = [b["end"] - b["start"] for b in self.batches if b["files"] == 0]
+        return median(ds) if ds else 0.0
 
 
 def _file_offsets(checkpoint: str) -> dict[str, int]:
@@ -160,22 +195,45 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
     t_start = time.time()
     land_file(warm, t_start)
     warm_ok = progress.wait_files(1, COMMIT_TIMEOUT_S)
-    t0 = time.time() + 0.5
-    t_burst = t0 + n_paced * PACED_INTERVAL_S
+    nodata = warm_ok and progress.wait_nodata(NODATA_SAMPLES, NODATA_WAIT_S)
+    anchor_hops: list[int] = []
+    burst_at: list[float] = []
 
     def generator() -> None:
+        stalled = not warm_ok
         for i, name in enumerate(paced):
-            land_file(name, t0 + i * PACED_INTERVAL_S)
-        while (wait := t_burst - time.time()) > 0:
-            time.sleep(min(wait, 0.01))
+            if stalled:  # the stream stopped committing: land the rest unpaced
+                land_file(name, time.time())
+                continue
+            if not nodata:  # no batch in flight to wait for
+                land_file(name, time.time())
+                stalled = not progress.wait_files(2 + i, COMMIT_TIMEOUT_S)
+                continue
+            frac = (i + 0.5) / len(paced)
+            seen, end = progress.latest()
+            hops = 0
+            # a batch started when the latest one ended; land at the
+            # file's point of it, or of a later one if that has passed
+            while (when := end + PACED_MARGIN_S + frac * max(
+                    progress.nodata_s() - 2 * PACED_MARGIN_S, 0.0)) < time.time() + 0.01:
+                if not progress.wait_batches(seen + 1, NODATA_WAIT_S):
+                    when = time.time()
+                    break
+                seen, end = progress.latest()
+                hops += 1
+            anchor_hops.append(hops)
+            land_file(name, when)
+            stalled = not progress.wait_files(2 + i, COMMIT_TIMEOUT_S)
+        burst_at.append(time.time())
         for name in burst:
             os.rename(os.path.join(stage, name), os.path.join(land, name))
-            due[name] = t_burst
-        late.append(time.time() - t_burst)
+            due[name] = burst_at[0]
+        late.append(time.time() - burst_at[0])
 
     gen = threading.Thread(target=generator, name="perfbench-generator")
     gen.start()
     gen.join()
+    t_burst = burst_at[0]
     drained = progress.wait_files(len(due), COMMIT_TIMEOUT_S)
     t_end = time.time()
     t_stop = time.perf_counter()
@@ -224,6 +282,9 @@ def run_phase(sess, work: str, seed: int, seconds: float) -> dict:
         "warm_committed": warm_ok,
         "warm_file_s": fresh.get(warm),
         "paced_files": len(paced),
+        "nodata_batches": nodata,
+        "paced_anchor_hops": anchor_hops,
+        "nodata_s_median": progress.nodata_s(),
         "freshness_s": {n: round(v, 4) for n, v in fresh.items()},
         "freshness_p50_s": median(paced_fresh),
         "freshness_mean_s": statistics.fmean(paced_fresh),
