@@ -26,6 +26,11 @@ from __future__ import annotations
 import argparse
 import sys
 
+PROTOCOLS = [
+    "diameter", "gsm_map", "gtp", "sip", "smpp", "cap",
+    "http_ocs", "http_ss7", "http_smpp", "http_camel", "http_diameter",
+]
+
 
 def build_pipeline(spark, protocol: str, input_glob: str):
     """Compose source → decode → correlate for one protocol.
@@ -84,7 +89,9 @@ def build_pipeline(spark, protocol: str, input_glob: str):
         if protocol == "http_ocs":
             out = link_http(extract_ocs(msgs), enrich_cols=["msisdn", "calling", "called"])
         elif protocol == "http_ss7":
-            out = link_http(extract_ss7sms(msgs), enrich_cols=["msisdn", "imsi"])
+            out = link_http(
+                extract_ss7sms(msgs), enrich_cols=["msisdn_orig", "msisdn_dest", "imsi"]
+            )
         else:
             dialect = protocol.split("_", 1)[1].upper()
             out = link_http(extract_generic(msgs, dialect), enrich_cols=["msisdn", "imsi"])
@@ -115,10 +122,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--protocol",
         required=False,
-        choices=[
-            "diameter", "gsm_map", "gtp", "sip", "smpp", "cap",
-            "http_ocs", "http_ss7", "http_smpp", "http_camel", "http_diameter",
-        ],
+        choices=PROTOCOLS,
     )
     ap.add_argument("--input", required=False, help="capture-file glob (pcap/pcapng; tshark JSON for cap)")
     ap.add_argument("--out", required=False, help="output table directory (query mode: omit to print)")
@@ -176,11 +180,15 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         msgs = stream_decode_diameter(expand_l4(stream_frames(spark, args.input)))
+        # a continuous trigger: availableNow would fix its offsets at
+        # start, and under the decode's processing-time state timeout
+        # it never terminates
         q = write_stream_with_ledger(
             msgs.drop("ts"),
             args.out,
             args.checkpoint or args.out + "_ckpt",
             args.ledger,
+            trigger_available_now=False,
         )
         q.awaitTermination()
         return 0

@@ -23,7 +23,7 @@ and AQE picks the physical join.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -146,34 +146,56 @@ def parse_message(buf: bytes) -> tuple[dict | None, int]:
     return msg, length
 
 
-def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """R1/R2 in batch: replay one stream's segments in frame order
-    with the reference's stash-and-retry semantics; emit one row per
-    complete message."""
-    pdf = pdf.sort_values("frame_no")
-    file = pdf["file"].iloc[0]
-    src, dst = pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0]
-    pending = b""
-    pending_frames: list[int] = []
-    rows: list[tuple] = []
-    for frame_no, ts_us, payload in zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]):
+def stitch(
+    segments: Iterable[tuple[int, int, bytes]],
+    pending: bytes = b"",
+    pending_frames: Sequence[int] = (),
+) -> tuple[list[tuple[list[int], int, tuple]], bytes, list[int]]:
+    """R1/R2, the one reassembly walk of batch and streaming: one
+    stream's frame-ordered ``(frame_no, ts_us, payload)`` resumed
+    from the ``pending`` tail an earlier call left → ``(messages,
+    pending, pending_frames)``; each message (Device-Watchdogs too)
+    is ``(frames_list, ts_us, fields)``, ``fields`` in
+    ``MESSAGE_SCHEMA`` order from ``request`` on."""
+    messages: list[tuple[list[int], int, tuple]] = []
+    frames = list(pending_frames)
+    for frame_no, ts_us, payload in segments:
         buf = pending + bytes(payload)
-        frames = pending_frames + [int(frame_no)]
+        frames = frames + [int(frame_no)]
         pos = 0
         while pos < len(buf):
             msg, consumed = parse_message(buf[pos:])
             if consumed == -1:
                 break  # incomplete: stash remainder (diameter.py:274-287)
             if msg is not None:
-                rows.append(
-                    (file, frames, int(ts_us), src, dst)
-                    + tuple(msg.get(c) for c in _COLS[5:])
-                )
+                messages.append((frames, int(ts_us), tuple(msg.get(c) for c in _COLS[5:])))
                 frames = [int(frame_no)]  # later messages: this frame only
             pos += consumed
         pending = buf[pos:]
-        pending_frames = frames if pending else []
+        frames = frames if pending else []
+    return messages, pending, frames
+
+
+def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batch R1/R2: one stream's segments from an empty state."""
+    pdf = pdf.sort_values("frame_no")
+    file, src, dst = pdf["file"].iloc[0], pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0]
+    messages, _, _ = stitch(zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]))
+    rows = [(file, fl, ts_us, src, dst) + fields for fl, ts_us, fields in messages]
     return pd.DataFrame(rows, columns=_COLS)
+
+
+STREAM_KEY = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
+
+
+def diameter_flows(segments: DataFrame) -> DataFrame:
+    """SCTP chunks and TCP data segments (ACK, PSH+ACK) on the
+    Diameter port, as ``STREAM_KEY`` + (frame_no, ts_us, payload)."""
+    return (
+        segments.where((F.col("src_port") == DIAMETER_PORT) | (F.col("dst_port") == DIAMETER_PORT))
+        .where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
+        .select(*STREAM_KEY, "frame_no", "ts_us", "payload")
+    )
 
 
 def decode_diameter(segments: DataFrame) -> DataFrame:
@@ -184,12 +206,8 @@ def decode_diameter(segments: DataFrame) -> DataFrame:
     flow 4-tuple — diameter.py:74-96 — refined by file so captures
     never cross-talk. Device-Watchdog (cmd 280) is dropped natively
     after decode (diameter.py:128-130)."""
-    flows = segments.where(
-        (F.col("src_port") == DIAMETER_PORT) | (F.col("dst_port") == DIAMETER_PORT)
-    ).where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
-    key = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
-    msgs = flows.select(*key, "frame_no", "ts_us", "payload").groupBy(*key).applyInPandas(
-        lambda pdf: _stitch_group(pdf), MESSAGE_SCHEMA
+    msgs = diameter_flows(segments).groupBy(*STREAM_KEY).applyInPandas(
+        _stitch_group, MESSAGE_SCHEMA
     )
     return (
         msgs.where(F.col("command_code") != CMD_DEVICE_WATCHDOG)

@@ -28,8 +28,8 @@ from __future__ import annotations
 import struct
 from binascii import hexlify
 from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ingestor_etl_spark.protocols import map_rows
 from ingestor_etl_spark.sources.pcap import DLT_MTP3
 
 M3UA_PPID = 3
@@ -457,69 +458,39 @@ GSM_MAP_SCHEMA = StructType(
 _OUT_COLS = [f.name for f in GSM_MAP_SCHEMA.fields]
 
 
+def sccp_row(file, frame_no, ts_us, sip, dip, payload, parse):
+    """One M3UA chunk or raw-MTP3 frame → its SCCP-level row, with
+    ``parse`` (``parse_m3ua`` / ``parse_mtp3``) peeling the layer
+    below SCCP down to (OPC, DPC, SCCP bytes)."""
+    lower = parse(bytes(payload))
+    if lower is None:
+        return
+    opc, dpc, sccp = lower
+    info = parse_sccp(sccp)
+    if info is None:
+        return
+    yield (
+        file, frame_no, ts_us, sip, dip, opc, dpc, info["tcap"],
+        info["seg_first"], info["seg_remaining"], info["seg_ref"],
+        info["cd_ssn"], info["cd_digits"], info["cg_ssn"], info["cg_digits"],
+    )
+
+
 def _sccp_rows(segments: DataFrame, frames: DataFrame | None) -> DataFrame:
     """Stage 1: M3UA chunks (P7/P8) + optional raw-MTP3 frames (P9)
     → SCCP-level rows."""
-
-    def gen_m3ua(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frame_no, ts_us, sip, dip, payload in zip(
-                pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["payload"],
-            ):
-                try:
-                    m3ua = parse_m3ua(bytes(payload))
-                    if m3ua is None:
-                        continue
-                    opc, dpc, sccp = m3ua
-                    info = parse_sccp(sccp)
-                    if info is None:
-                        continue
-                    rows.append(
-                        (file, frame_no, ts_us, sip, dip, opc, dpc, info["tcap"],
-                         info["seg_first"], info["seg_remaining"], info["seg_ref"],
-                         info["cd_ssn"], info["cd_digits"],
-                         info["cg_ssn"], info["cg_digits"])
-                    )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=[f.name for f in _SCCP_SCHEMA.fields])
-
     m3ua_src = segments.where(
         (F.col("ip_proto") == 132) & (F.col("sctp_ppid") == M3UA_PPID)
     ).select("file", "frame_no", "ts_us", "src_ip", "dst_ip", "payload")
-    out = m3ua_src.mapInPandas(gen_m3ua, _SCCP_SCHEMA)
+    out = map_rows(m3ua_src, _SCCP_SCHEMA, partial(sccp_row, parse=parse_m3ua))
 
     if frames is not None:
-        def gen_mtp3(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for file, frame_no, ts_us, pkt in zip(
-                    pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["payload"]
-                ):
-                    try:
-                        mtp3 = parse_mtp3(bytes(pkt))
-                        if mtp3 is None:
-                            continue
-                        opc, dpc, sccp = mtp3
-                        info = parse_sccp(sccp)
-                        if info is None:
-                            continue
-                        rows.append(
-                            (file, frame_no, ts_us, None, None, opc, dpc, info["tcap"],
-                             info["seg_first"], info["seg_remaining"], info["seg_ref"],
-                             info["cd_ssn"], info["cd_digits"],
-                             info["cg_ssn"], info["cg_digits"])
-                        )
-                    except Exception:
-                        continue
-                yield pd.DataFrame(rows, columns=[f.name for f in _SCCP_SCHEMA.fields])
-
+        no_ip = F.lit(None).cast("string")
         raw = frames.where((F.col("dlt") == DLT_MTP3) & F.col("error").isNull()).select(
-            "file", "frame_no", F.unix_micros("ts").alias("ts_us"), "payload"
+            "file", "frame_no", F.unix_micros("ts").alias("ts_us"),
+            no_ip.alias("src_ip"), no_ip.alias("dst_ip"), "payload",
         )
-        out = out.unionByName(raw.mapInPandas(gen_mtp3, _SCCP_SCHEMA))
+        out = out.unionByName(map_rows(raw, _SCCP_SCHEMA, partial(sccp_row, parse=parse_mtp3)))
     return out
 
 
@@ -562,29 +533,17 @@ def _reassemble_xudt(sccp_rows: DataFrame) -> DataFrame:
     return unsegmented.select(*merged.columns).unionByName(merged)
 
 
+def _tcap_rows(file, frames_list, ts_us, sip, dip, opc, dpc, tcap):
+    fields = parse_tcap(bytes(tcap))
+    if fields is not None:
+        yield (file, list(frames_list), ts_us, sip, dip, opc, dpc) + tuple(
+            fields.get(c) for c in _OUT_COLS[7:]
+        )
+
+
 def decode_gsm_map(segments: DataFrame, frames: DataFrame | None = None) -> DataFrame:
     """Full pipeline: M3UA/MTP3 → SCCP → R3 → TCAP fields. Pass the
     raw frames DataFrame too when the capture may be DLT 141."""
     sccp = _reassemble_xudt(_sccp_rows(segments, frames))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frames_list, ts_us, sip, dip, opc, dpc, tcap in zip(
-                pdf["file"], pdf["frames_list"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["mtp3_opc"], pdf["mtp3_dpc"], pdf["tcap_bytes"],
-            ):
-                try:
-                    fields = parse_tcap(bytes(tcap))
-                except Exception:
-                    fields = None
-                if fields is None:
-                    continue
-                rows.append(
-                    (file, list(frames_list), ts_us, sip, dip, opc, dpc)
-                    + tuple(fields.get(c) for c in _OUT_COLS[7:])
-                )
-            yield pd.DataFrame(rows, columns=_OUT_COLS)
-
-    out = sccp.mapInPandas(gen, GSM_MAP_SCHEMA)
+    out = map_rows(sccp, GSM_MAP_SCHEMA, _tcap_rows)
     return out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")

@@ -21,7 +21,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -32,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ingestor_etl_spark.protocols import map_rows
 
 SMPP_PORTS = (2775, 2776)
 
@@ -101,6 +102,11 @@ def parse_pdus(payload: bytes) -> Iterator[dict]:
         pos += length
 
 
+def _smpp_rows(file, frame_no, ts_us, sip, dip, sp, dp, payload):
+    for msg in parse_pdus(bytes(payload)):
+        yield (file, frame_no, ts_us, sip, dip, sp, dp) + tuple(msg.get(c) for c in _COLS[7:])
+
+
 def decode_smpp(segments: DataFrame) -> DataFrame:
     """PSH/ACK TCP segments on the SMPP ports → one row per kept
     PDU (P27; PSH+ACK gate = smpp_ingestor.py:96-101)."""
@@ -109,27 +115,10 @@ def decode_smpp(segments: DataFrame) -> DataFrame:
         & (F.col("tcp_flags") == 24)
         & (F.col("src_port").isin(*SMPP_PORTS) | F.col("dst_port").isin(*SMPP_PORTS))
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frame_no, ts_us, sip, dip, sp, dp, payload in zip(
-                pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["src_port"], pdf["dst_port"], pdf["payload"],
-            ):
-                try:
-                    for msg in parse_pdus(bytes(payload)):
-                        rows.append(
-                            (file, frame_no, ts_us, sip, dip, sp, dp)
-                            + tuple(msg.get(c) for c in _COLS[7:])
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=_COLS)
-
-    out = flows.select(
+    src = flows.select(
         "file", "frame_no", "ts_us", "src_ip", "dst_ip", "src_port", "dst_port", "payload"
-    ).mapInPandas(gen, SMPP_SCHEMA)
+    )
+    out = map_rows(src, SMPP_SCHEMA, _smpp_rows)
     return out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 

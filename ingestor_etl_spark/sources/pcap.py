@@ -167,6 +167,20 @@ def parse_file_rows(fname: str, content: bytes) -> list[tuple]:
     return rows
 
 
+def frames_from_files(files: DataFrame) -> DataFrame:
+    """``binaryFile`` rows → frames, one pandas frame per capture
+    file: the parser of both ``read_pcap`` and ``stream_frames``."""
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fname, content in zip(pdf["path"], pdf["content"]):
+                rows = parse_file_rows(fname, bytes(content))
+                yield pd.DataFrame(rows, columns=FRAME_SCHEMA.fieldNames())
+
+    frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
+    return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+
+
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Capture files → frames DataFrame.
 
@@ -174,13 +188,4 @@ def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     payload (BINARY), error``. A file that fails the magic sniff
     produces one error row instead of failing the job (§2.8
     error-row semantics)."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                rows = parse_file_rows(fname, bytes(content))
-                yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
-    return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+    return frames_from_files(spark.read.format("binaryFile").load(path))

@@ -14,6 +14,11 @@ at EOF (diameter.py:580-589). The streaming engine maps this to:
 - ``foreachBatch`` sinks + ledger append (S10) for exactly-once
   bookkeeping.
 
+Decode is the batch code itself: ``sources.pcap.frames_from_files``
+parses the files, ``protocols.map_rows`` runs the per-row decoders,
+and the keyed state carries ``protocols.diameter.stitch``'s pending
+tail from one micro-batch to the next.
+
 Scale: state lives in the state store (RocksDB on a real cluster),
 partitioned by key hash — the same partitioning the batch shuffle
 uses, but bounded by the timeout instead of file EOF.
@@ -26,7 +31,6 @@ log is replayable and each stage checkpoints independently."""
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -43,12 +47,13 @@ from pyspark.sql.types import (
 )
 
 from ingestor_etl_spark.protocols.diameter import (
+    CMD_DEVICE_WATCHDOG,
     MESSAGE_SCHEMA,
-    parse_message,
+    STREAM_KEY,
+    diameter_flows,
+    stitch,
 )
-from ingestor_etl_spark.sources.pcap import FRAME_SCHEMA, iter_frames
-
-_COLS = [f.name for f in MESSAGE_SCHEMA.fields]
+from ingestor_etl_spark.sources.pcap import frames_from_files
 
 
 def stream_frames(spark: SparkSession, path: str, max_files_per_trigger: int = 16) -> DataFrame:
@@ -60,20 +65,7 @@ def stream_frames(spark: SparkSession, path: str, max_files_per_trigger: int = 1
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(path)
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                rows: list[tuple] = []
-                try:
-                    for frame_no, ts_us, dlt, orig_len, payload in iter_frames(bytes(content)):
-                        rows.append((fname, frame_no, ts_us, dlt, orig_len, payload, None))
-                except Exception as exc:
-                    rows.append((fname, None, None, None, None, None, str(exc)))
-                yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
-    return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+    return frames_from_files(files)
 
 
 _STITCH_STATE = StructType(
@@ -84,26 +76,19 @@ _STITCH_STATE = StructType(
 )
 
 
-def stream_decode_diameter(
-    segments: DataFrame, timeout_ms: int = 60_000, port: int = 3868
-) -> DataFrame:
+def stream_decode_diameter(segments: DataFrame, timeout_ms: int = 60_000) -> DataFrame:
     """R1/R2 as keyed streaming state: per stream key, segments are
-    stitched with the same stash-and-retry walk as the batch path;
-    a processing-time timeout discards stale partial buffers (the
-    reference's implicit EOF flush)."""
-    flows = segments.where(
-        (F.col("src_port") == port) | (F.col("dst_port") == port)
-    ).where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
-    key_cols = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
-
-    def stitch(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    stitched by the batch walk (``diameter.stitch``) resumed from the
+    key's pending bytes; a processing-time timeout discards stale
+    partial buffers (the reference's implicit EOF flush)."""
+    def resume(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             state.remove()
             return
         pending, frames_csv = state.get if state.exists else (b"", "")
         pending = bytes(pending or b"")
         frames = [int(x) for x in frames_csv.split(",") if x]
-        file, src, dst = key[0], key[1], key[2]
+        file, src, dst = key[:3]
         rows: list[tuple] = []
         # applyInPandasWithState may deliver one key's rows as several
         # Arrow batches; concatenate and sort ONCE so reassembly sees a
@@ -111,44 +96,21 @@ def stream_decode_diameter(
         chunks = list(pdfs)
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values("frame_no")
-            for frame_no, ts_us, payload in zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]):
-                buf = pending + bytes(payload)
-                fl = frames + [int(frame_no)]
-                pos = 0
-                while pos < len(buf):
-                    msg, consumed = parse_message(buf[pos:])
-                    if consumed == -1:
-                        break
-                    if msg is not None:
-                        # reset frames for EVERY parsed message (matching
-                        # _stitch_group) — a skipped Device-Watchdog must
-                        # not leak its frames into the next message.
-                        if msg.get("command_code") != 280:
-                            rows.append(
-                                (file, fl, int(ts_us), src, dst)
-                                + tuple(msg.get(c) for c in _COLS[5:])
-                            )
-                        fl = [int(frame_no)]
-                    pos += consumed
-                pending = buf[pos:]
-                frames = fl if pending else []
+            messages, pending, frames = stitch(
+                zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]), pending, frames
+            )
+            rows = [(file, fl, ts_us, src, dst) + fields for fl, ts_us, fields in messages]
         state.update((pending, ",".join(str(f) for f in frames)))
         state.setTimeoutDuration(timeout_ms)
         if rows:
-            yield pd.DataFrame(rows, columns=_COLS)
+            yield pd.DataFrame(rows, columns=MESSAGE_SCHEMA.fieldNames())
 
-    out = (
-        flows.select(*key_cols, "frame_no", "ts_us", "payload")
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            stitch,
-            MESSAGE_SCHEMA,
-            _STITCH_STATE,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    out = diameter_flows(segments).groupBy(*STREAM_KEY).applyInPandasWithState(
+        resume, MESSAGE_SCHEMA, _STITCH_STATE, "append", GroupStateTimeout.ProcessingTimeTimeout
     )
-    return out.withColumn("ts", F.timestamp_micros("ts_us"))
+    return out.where(F.col("command_code") != CMD_DEVICE_WATCHDOG).withColumn(
+        "ts", F.timestamp_micros("ts_us")
+    )
 
 
 _PAIR_SCHEMA = StructType(
@@ -384,9 +346,6 @@ def stream_zscore_outliers(
     the raw trailing VALUES (a windowed agg can't carry them)."""
     import math as _math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_cols = ["event_id", "user_id", "cents", "n_window", "z"]
 
     def score(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
@@ -545,8 +504,6 @@ def stream_funnel(events: DataFrame, timeout_ms: int = 86_400_000) -> DataFrame:
     older than the recorded stage-1 time would need retraction,
     which batch funnel_conversion handles exactly). Requires columns
     (user_id, event_type, ts)."""
-    import pandas as pd
-
     def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         if state.hasTimedOut:

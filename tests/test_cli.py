@@ -5,8 +5,14 @@ one command: capture glob → pipeline → table + ingestion ledger."""
 from __future__ import annotations
 
 import glob
+import json
+import os
+import threading
+import time
 
-from ingestor_etl_spark.__main__ import main
+import pytest
+
+from ingestor_etl_spark.__main__ import PROTOCOLS, main
 from ingestor_etl_spark.sinks.ledger import current_ledger_state
 from tests import pcapgen as g
 from tests.test_diameter import _cca, _ccr
@@ -79,3 +85,103 @@ def test_cli_list_queries(capsys):
     assert main(["--list-queries"]) == 0
     names = [l.split("\t")[0] for l in capsys.readouterr().out.splitlines()]
     assert "q1_pricing_summary" in names and "pagerank_dup_graph" in names
+
+
+def test_cli_streaming_ingests_files_landed_after_start(spark, tmp_path):
+    """``--streaming`` keeps running and picks up captures as they
+    land: file B lands only after file A's ledger row, and both get
+    their messages and a ledger row; the TCP-split request is
+    stitched across frames 1-2."""
+    ccr, cca = _ccr(), _cca()
+    half = len(ccr) // 2
+    capture = g.pcap([
+        (2400, 0, g.eth(g.ipv4(g.tcp(ccr[:half], 40001, 3868, seq=1, ack=1), 6))),
+        (2400, 1, g.eth(g.ipv4(g.tcp(ccr[half:], 40001, 3868, seq=1 + half, ack=1), 6))),
+        (2401, 0, g.eth(g.ipv4(g.sctp([(1, 0, 46, cca)], 3868, 40001), 132,
+                               src="10.0.0.2", dst="10.0.0.1"))),
+    ])
+    drop, staging = tmp_path / "drop", tmp_path / "staging"
+    drop.mkdir()
+    staging.mkdir()
+    out, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
+    argv = [
+        "--protocol", "diameter", "--streaming",
+        "--input", str(drop) + "/*.pcap",
+        "--out", out,
+        "--ledger", ledger,
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ]
+    before = {q.id for q in spark.streams.active}
+    result: dict = {}
+
+    def run():
+        try:
+            result["rc"] = main(argv)
+        except Exception as exc:  # surfaced by the waits below
+            result["exc"] = exc
+
+    def land(name):
+        (staging / name).write_bytes(capture)
+        os.replace(staging / name, drop / name)  # atomic: never seen half-written
+
+    def ledger_files():
+        try:
+            return {r.filename.rsplit("/", 1)[-1]: r.processed
+                    for r in current_ledger_state(spark, ledger).collect()}
+        except Exception:  # ledger not written yet
+            return {}
+
+    def wait_for(name, timeout=60):
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            assert "exc" not in result, result["exc"]
+            if name in ledger_files():
+                return
+            time.sleep(0.25)
+        raise AssertionError(f"no ledger row for {name} after {timeout} s")
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    try:
+        land("a.pcap")
+        wait_for("a.pcap")
+        land("b.pcap")
+        wait_for("b.pcap")
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
+        runner.join(30)
+    assert result == {"rc": 0}
+    assert ledger_files() == {"a.pcap": 2, "b.pcap": 2}
+    got = spark.read.parquet(out).toPandas()
+    got["name"] = got.file.str.rsplit("/", n=1).str[-1]
+    assert sorted(got.name) == ["a.pcap", "a.pcap", "b.pcap", "b.pcap"]
+    for _, req in got[got.request].iterrows():
+        assert list(req.frames_list) == [1, 2]
+
+
+@pytest.fixture(scope="module")
+def capture_globs(tmp_path_factory):
+    """One tiny capture per input kind: a pcap for the pcap protocols
+    and a tshark JSON export for ``cap``."""
+    d = tmp_path_factory.mktemp("analysis")
+    (d / "x.pcap").write_bytes(g.pcap([(1, 0, g.eth(g.ipv4(g.udp(b"x", 1, 2), 17)))]))
+    layers = {"frame.number": ["1"], "frame.time_epoch": ["1700000000.0"]}
+    (d / "x.json").write_text(json.dumps([{"_source": {"layers": layers}}]))
+    return {"pcap": str(d / "*.pcap"), "cap": str(d / "*.json")}
+
+
+@pytest.mark.parametrize("protocol", PROTOCOLS)
+def test_build_pipeline_analyzes(spark, capture_globs, protocol):
+    """Every ``--protocol`` choice composes into frames Spark can
+    analyze: both the table and the decode stage resolve."""
+    from ingestor_etl_spark.__main__ import build_pipeline
+    from ingestor_etl_spark.plans.layout import release_caches
+
+    glob_ = capture_globs["cap" if protocol == "cap" else "pcap"]
+    try:
+        out, decoded = build_pipeline(spark, protocol, glob_)
+        assert out.schema.fields and decoded.schema.fields
+    finally:
+        release_caches()

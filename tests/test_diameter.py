@@ -8,6 +8,7 @@ from ingestor_etl_spark.protocols.diameter import (
     correlate_diameter,
     decode_diameter,
     parse_message,
+    stitch,
 )
 from ingestor_etl_spark.protocols.net import expand_l4
 from ingestor_etl_spark.sources.pcap import read_pcap
@@ -85,6 +86,43 @@ def test_parse_incomplete_signals_reassembly():
     buf = _ccr()[: len(_ccr()) // 2]
     msg, consumed = parse_message(buf)
     assert msg is None and consumed == -1
+
+
+def _stitch_segments():
+    """Frame-ordered (frame_no, ts_us, payload) of one stream: a CCR
+    split over frames 1-2, its CCA in frame 2 too, a Device-Watchdog
+    split over frames 3-4 with a whole CCR in frame 4, and the head
+    of a CCA left incomplete in frame 5."""
+    ccr, cca = _ccr(), _cca()
+    dwr = g.diameter_msg(280, True, 5, 6, [g.diameter_avp(264, b"peer.example")])
+    ccr2, cca2 = _ccr(msisdn="5215550002"), _cca(result=5012)
+    payloads = [ccr[:30], ccr[30:] + cca, dwr[:10], dwr[10:] + ccr2, cca2[:25]]
+    return [(i + 1, 1000 + i, p) for i, p in enumerate(payloads)], cca2[:25]
+
+
+def test_stitch_frames_and_pending():
+    segs, tail = _stitch_segments()
+    messages, pending, pending_frames = stitch(segs)
+    # fields[1] is command_code, fields[0] request
+    got = [(frames, ts_us, fields[0], fields[1]) for frames, ts_us, fields in messages]
+    assert got == [
+        ([1, 2], 1001, True, 272),  # split across segments
+        ([2], 1001, False, 272),  # second message of the same segment
+        ([3, 4], 1003, True, 280),  # the watchdog is returned, dropped later
+        ([4], 1003, True, 272),  # the watchdog's frame 3 does not leak
+    ]
+    assert (pending, pending_frames) == (tail, [5])  # incomplete: stays pending
+
+
+@pytest.mark.parametrize("cut", range(6))
+def test_stitch_resumes_from_pending_state(cut):
+    """One call == two calls carrying (pending, pending_frames): the
+    streaming decode resumes the batch walk from its keyed state."""
+    segs, _ = _stitch_segments()
+    whole = stitch(segs)
+    first, pending, pending_frames = stitch(segs[:cut])
+    second, pending, pending_frames = stitch(segs[cut:], pending, pending_frames)
+    assert (first + second, pending, pending_frames) == whole
 
 
 @pytest.fixture(scope="module")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import glob
+import time
 
 from pyspark.sql import functions as F
 
@@ -23,7 +24,16 @@ from tests.test_diameter import _cca, _ccr
 
 
 def _await(query, timeout=120):
-    query.awaitTermination(timeout)
+    """Wait until ``query`` terminates or has drained (a no-data
+    batch follows its data batches), then stop it; ``timeout`` bounds
+    the wait. A stateful query under a processing-time timeout keeps
+    running no-data batches, so its availableNow trigger never ends
+    on its own."""
+    deadline = time.monotonic() + timeout
+    while not query.awaitTermination(0.5) and time.monotonic() < deadline:
+        progress = query.recentProgress
+        if any(p.numInputRows for p in progress) and progress[-1].numInputRows == 0:
+            break
     if query.isActive:
         query.stop()
 
