@@ -17,6 +17,10 @@ Layout:
   sinks/     — JDBC/parquet writers with pre-generated ids
 """
 
+from ingestor_etl_spark._zipcache import install_in_worker
 from ingestor_etl_spark.session import get_spark  # noqa: F401
+
+# a no-op on the driver; see _zipcache for the per-task cost it removes
+install_in_worker()
 
 __version__ = "0.1.0"

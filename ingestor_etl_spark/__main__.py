@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from functools import partial
 
 PROTOCOLS = [
     "diameter", "gsm_map", "gtp", "sip", "smpp", "cap",
@@ -37,15 +38,23 @@ def build_pipeline(spark, protocol: str, input_glob: str):
     Returns ``(output_df, decoded_df)`` — the table to write and the
     per-message decode stage the ledger counts are taken from
     (correlated outputs merge req/ans rows and lose the per-file
-    grain the A1 counters need). Mirrors §3's lifecycles."""
+    grain the A1 counters need). Mirrors §3's lifecycles.
+
+    ``decoded_df`` is persisted and the table is built on it, so one
+    ingest decodes once: writing the table fills the cache and the
+    ledger counts group it (``release_caches()`` drops it)."""
+    from ingestor_etl_spark.plans.layout import materialize
     from ingestor_etl_spark.protocols.net import expand_l4
     from ingestor_etl_spark.sources.pcap import read_pcap
+
+    def same(decoded):
+        return decoded
 
     if protocol == "cap":
         from ingestor_etl_spark.protocols.cap import decode_cap, read_tshark_json
 
-        out = decode_cap(read_tshark_json(spark, input_glob))
-        return out, out
+        decoded = materialize(decode_cap(read_tshark_json(spark, input_glob), with_file=True))
+        return decoded.drop("file"), decoded
 
     frames = expand_l4(read_pcap(spark, input_glob))
     if protocol == "diameter":
@@ -54,29 +63,24 @@ def build_pipeline(spark, protocol: str, input_glob: str):
             decode_diameter,
         )
 
-        msgs = decode_diameter(frames)
-        return correlate_diameter(msgs), msgs
-    if protocol == "gsm_map":
+        decoded, table = decode_diameter(frames), correlate_diameter
+    elif protocol == "gsm_map":
         from ingestor_etl_spark.protocols.gsm_map import decode_gsm_map
 
-        out = decode_gsm_map(frames)
-        return out, out
-    if protocol == "gtp":
+        decoded, table = decode_gsm_map(frames), same
+    elif protocol == "gtp":
         from ingestor_etl_spark.protocols.gtp import decode_gtp, enrich_gtp_transactions
 
-        msgs = decode_gtp(frames)
-        return enrich_gtp_transactions(msgs), msgs
-    if protocol == "sip":
+        decoded, table = decode_gtp(frames), enrich_gtp_transactions
+    elif protocol == "sip":
         from ingestor_etl_spark.protocols.sip import decode_sip
 
-        out = decode_sip(frames)
-        return out, out
-    if protocol == "smpp":
+        decoded, table = decode_sip(frames), same
+    elif protocol == "smpp":
         from ingestor_etl_spark.protocols.smpp import decode_smpp, group_smpp_transactions
 
-        msgs = decode_smpp(frames)
-        return group_smpp_transactions(msgs), msgs
-    if protocol in ("http_ocs", "http_ss7", "http_smpp", "http_camel", "http_diameter"):
+        decoded, table = decode_smpp(frames), group_smpp_transactions
+    elif protocol in ("http_ocs", "http_ss7", "http_smpp", "http_camel", "http_diameter"):
         from ingestor_etl_spark.protocols.http_sig import (
             extract_generic,
             extract_ocs,
@@ -85,18 +89,23 @@ def build_pipeline(spark, protocol: str, input_glob: str):
             link_http,
         )
 
-        msgs = http_messages(frames)
+        decoded = http_messages(frames)
         if protocol == "http_ocs":
-            out = link_http(extract_ocs(msgs), enrich_cols=["msisdn", "calling", "called"])
+            extract, enrich = extract_ocs, ["msisdn", "calling", "called"]
         elif protocol == "http_ss7":
-            out = link_http(
-                extract_ss7sms(msgs), enrich_cols=["msisdn_orig", "msisdn_dest", "imsi"]
-            )
+            extract, enrich = extract_ss7sms, ["msisdn_orig", "msisdn_dest", "imsi"]
         else:
             dialect = protocol.split("_", 1)[1].upper()
-            out = link_http(extract_generic(msgs, dialect), enrich_cols=["msisdn", "imsi"])
-        return out, msgs
-    raise SystemExit(f"unknown protocol: {protocol}")
+            extract, enrich = partial(extract_generic, dialect=dialect), ["msisdn", "imsi"]
+
+        def table(msgs):
+            return link_http(extract(msgs), enrich_cols=enrich)
+    else:
+        raise SystemExit(f"unknown protocol: {protocol}")
+    # correlate_diameter materializes its input too; materialize()
+    # returns an already-persisted frame as it is
+    decoded = materialize(decoded)
+    return table(decoded), decoded
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -193,13 +202,22 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination()
         return 0
 
+    from ingestor_etl_spark.plans.layout import release_caches
+
     df, decoded = build_pipeline(spark, args.protocol, args.input)
-    df.write.format(args.format).mode("append").save(args.out)
+    try:
+        ledger = None
+        if args.ledger:
+            from ingestor_etl_spark.sinks.ledger import append_ledger, file_counters, ledger_rows
 
-    if args.ledger:
-        from ingestor_etl_spark.sinks.ledger import append_ledger, file_counters, ledger_rows
-
-        append_ledger(ledger_rows(file_counters(decoded)), args.ledger)
+            # built (and so analyzed) before the table write: a ledger that
+            # cannot be built fails the run before any output is appended
+            ledger = ledger_rows(file_counters(decoded))
+        df.write.format(args.format).mode("append").save(args.out)
+        if ledger is not None:
+            append_ledger(ledger, args.ledger)
+    finally:
+        release_caches()
     return 0
 
 

@@ -17,6 +17,7 @@ These are the knobs the operator modules assume at cluster scale:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -125,6 +126,8 @@ def plan_facts(df: DataFrame) -> dict[str, object]:
     }
 
 
+_log = logging.getLogger(__name__)
+
 _PERSISTED: list[DataFrame] = []
 
 
@@ -143,9 +146,12 @@ def materialize(df: DataFrame) -> DataFrame:
     them all. The cache contract is QUERY-scoped, not session-
     scoped: long-lived sessions (the driver's 70-query sweep,
     bench.py) call ``release_caches()`` between queries so the
-    executor storage pool never accumulates dead stages."""
+    executor storage pool never accumulates dead stages. A frame
+    that is already persisted is returned as it is."""
     from pyspark.storagelevel import StorageLevel
 
+    if df.is_cached:
+        return df
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(out)
     return out
@@ -155,7 +161,8 @@ def release_caches() -> int:
     """Unpersist every DataFrame materialize() has pinned since the
     last release. Safe to call while a previously-returned result is
     still referenced — Spark recomputes from lineage if re-used.
-    Returns the number of stages released."""
+    A stage whose unpersist fails is logged with its exception and
+    dropped all the same. Returns the number of stages released."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -163,5 +170,5 @@ def release_caches() -> int:
             df.unpersist()
             n += 1
         except Exception:
-            pass
+            _log.exception("release_caches: unpersist failed; stage dropped")
     return n

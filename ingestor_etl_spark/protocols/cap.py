@@ -64,13 +64,17 @@ def _field_factory(tshark_df: DataFrame):
     return _field
 
 
-def decode_cap(tshark_df: DataFrame) -> DataFrame:
+def decode_cap(tshark_df: DataFrame, with_file: bool = False) -> DataFrame:
     """P33 projection. Notables mirrored from the reference:
     - OPC/DPC: mtp3.* with m3ua.protocol_data_* fallback (coalesce)
     - otid/dtid are hex strings → int (conv base 16)
     - msisdn/imsi: first element, trimmed
     - operation name from CAP opcode map; tid = otid for initialDP
       else dtid (cap_ingestor.py:139-143)
+
+    ``with_file`` appends the export's path as ``file`` (read from the
+    file source's ``_metadata``), the per-file grain the ingestion
+    ledger groups by; the table itself has no such column.
     """
     _field = _field_factory(tshark_df)
     op_map = F.create_map(
@@ -107,4 +111,5 @@ def decode_cap(tshark_df: DataFrame) -> DataFrame:
         camel_local.alias("camel_local"),
         mess_type.alias("tcap_mess_type"),
         F.when(F.lower(mess_type) == "initialdp", otid).otherwise(dtid).alias("tcap_tid"),
+        *([F.col("_metadata.file_path").alias("file")] if with_file else []),
     ).where(F.col("camel_local").isNotNull())

@@ -185,3 +185,85 @@ def test_build_pipeline_analyzes(spark, capture_globs, protocol):
         assert out.schema.fields and decoded.schema.fields
     finally:
         release_caches()
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a logical plan, not descending into the cached
+    plan an ``InMemoryRelation`` (a leaf) holds."""
+    kids = plan.children()
+    names = [plan.nodeName()]
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
+
+
+@pytest.mark.parametrize("protocol", PROTOCOLS)
+def test_build_pipeline_decodes_once(spark, capture_globs, protocol):
+    """The decode stage is persisted, and the ledger counters read its
+    cache: no Python decode pass and no file scan outside it."""
+    from ingestor_etl_spark.__main__ import build_pipeline
+    from ingestor_etl_spark.plans.layout import release_caches
+    from ingestor_etl_spark.sinks.ledger import file_counters
+
+    glob_ = capture_globs["cap" if protocol == "cap" else "pcap"]
+    try:
+        _, decoded = build_pipeline(spark, protocol, glob_)
+        assert decoded.is_cached
+        nodes = _plan_nodes(file_counters(decoded)._jdf.queryExecution().optimizedPlan())
+        assert "InMemoryRelation" in nodes, nodes
+        assert not {"MapInPandas", "FlatMapGroupsInPandas", "LogicalRelation"} & set(nodes), nodes
+    finally:
+        release_caches()
+
+
+def test_cli_cap_writes_table_once_and_ledger(spark, tmp_path):
+    """``--protocol cap --ledger``: the table keeps the decode columns
+    (no ``file``) and the ledger gets the export's one row."""
+    from ingestor_etl_spark.protocols.cap import decode_cap, read_tshark_json
+    from tests.test_cap import _pkt
+
+    drop = tmp_path / "caps"
+    drop.mkdir()
+    (drop / "cap1.json").write_text(json.dumps([_pkt(1, "1700000000.5", 0, otid="00a1")]))
+    out, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
+    rc = main([
+        "--protocol", "cap",
+        "--input", str(drop / "*.json"),
+        "--out", out,
+        "--ledger", ledger,
+    ])
+    assert rc == 0
+    table = spark.read.parquet(out)
+    assert table.columns == decode_cap(read_tshark_json(spark, str(drop / "*.json"))).columns
+    assert table.count() == 1
+    state = current_ledger_state(spark, ledger).toPandas()
+    assert len(state) == 1 and state.iloc[0].processed == 1
+    assert state.iloc[0].filename.endswith("/cap1.json")
+
+
+def test_cli_ledger_analysis_error_writes_no_table(spark, tmp_path, monkeypatch):
+    """A ledger that cannot be built fails the run before the table
+    write appends anything."""
+    from pyspark.errors import AnalysisException
+
+    import ingestor_etl_spark.__main__ as cli
+
+    real = cli.build_pipeline
+
+    def no_file_column(spark_, protocol, input_glob):
+        out, decoded = real(spark_, protocol, input_glob)
+        return out, decoded.drop("file")
+
+    monkeypatch.setattr(cli, "build_pipeline", no_file_column)
+    drop = tmp_path / "caps"
+    drop.mkdir()
+    (drop / "cap1.pcap").write_bytes(g.pcap([(1, 0, g.eth(g.ipv4(g.udp(b"x", 1, 2), 17)))]))
+    out = tmp_path / "table"
+    with pytest.raises(AnalysisException):
+        main([
+            "--protocol", "gtp",
+            "--input", str(drop) + "/*.pcap",
+            "--out", str(out),
+            "--ledger", str(tmp_path / "ledger"),
+        ])
+    assert not out.exists()
