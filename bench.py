@@ -15,6 +15,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -222,7 +223,7 @@ def _layout_note(sf_dir: str) -> str | None:
 _SPLIT_ROW_GROUPS = 32  # target row groups per table in the split copy
 
 
-def _split_copy_dir(sf_dir: str) -> str | None:
+def _split_copy_dir(sf_dir: str) -> str:
     """Materialize a SPLITTABLE multi-row-group copy of the testdata
     (≥_SPLIT_ROW_GROUPS row groups per table) under /tmp, cached by a
     (name, size, mtime) fingerprint of the source files — the same
@@ -230,48 +231,46 @@ def _split_copy_dir(sf_dir: str) -> str | None:
     row group per table (unsplittable → single-task scans), which is
     NOT the layout BASELINE.md was measured on and not what any real
     deployment reads; benching both layouts separates plan quality
-    from this test-rig artifact (SCALING.md §15). Returns None if the
-    copy can't be built (bench then reports raw-layout numbers only).
+    from this test-rig artifact (SCALING.md §15). Raises when the
+    copy can't be built; the main bench then reports raw-layout
+    numbers and the error (see main).
     """
     import glob
     import hashlib
     import tempfile
 
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        srcs = sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
-        if not srcs:
-            return None
-        fp = hashlib.md5(
-            "|".join(
-                f"{os.path.basename(p)}:{os.path.getsize(p)}:{int(os.path.getmtime(p))}"
-                for p in srcs
-            ).encode()
-        ).hexdigest()[:12]
-        out_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"ingestor_etl_spark_bench_split_{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        )
-        marker = os.path.join(out_dir, "_DONE")
-        if os.path.exists(marker):
-            return out_dir
-        os.makedirs(out_dir, exist_ok=True)
-        for p in srcs:
-            t = pq.ParquetFile(p).read()
-            rg = max(1024, t.num_rows // _SPLIT_ROW_GROUPS)
-            # version 2.6 preserves TIMESTAMP(NANOS) (events.ts)
-            pq.write_table(
-                t,
-                os.path.join(out_dir, os.path.basename(p)),
-                row_group_size=rg,
-                version="2.6",
-            )
-        with open(marker, "w") as fh:
-            fh.write(fp)
+    srcs = sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
+    if not srcs:
+        raise FileNotFoundError(f"no *.parquet under {sf_dir}")
+    fp = hashlib.md5(
+        "|".join(
+            f"{os.path.basename(p)}:{os.path.getsize(p)}:{int(os.path.getmtime(p))}"
+            for p in srcs
+        ).encode()
+    ).hexdigest()[:12]
+    out_dir = os.path.join(
+        tempfile.gettempdir(),
+        f"ingestor_etl_spark_bench_split_{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
+    )
+    marker = os.path.join(out_dir, "_DONE")
+    if os.path.exists(marker):
         return out_dir
-    except Exception:
-        return None
+    os.makedirs(out_dir, exist_ok=True)
+    for p in srcs:
+        t = pq.ParquetFile(p).read()
+        rg = max(1024, t.num_rows // _SPLIT_ROW_GROUPS)
+        # version 2.6 preserves TIMESTAMP(NANOS) (events.ts)
+        pq.write_table(
+            t,
+            os.path.join(out_dir, os.path.basename(p)),
+            row_group_size=rg,
+            version="2.6",
+        )
+    with open(marker, "w") as fh:
+        fh.write(fp)
+    return out_dir
 
 
 # maxPartitionBytes for the split-copy runs: sized so the sf0.1
@@ -379,7 +378,13 @@ def main() -> None:
     # maxPartitionBytes override. Reported as the PRIMARY number;
     # the raw numbers + delta quantify the test-rig layout artifact
     # permanently (round-4 verdict item 5, SCALING.md §15).
-    split_dir = _split_copy_dir(sf_dir)
+    # A failed copy falls back to the raw layout, loudly: traceback on
+    # stderr, error in the JSON line.
+    try:
+        split_dir, split_error = _split_copy_dir(sf_dir), None
+    except Exception as exc:
+        traceback.print_exc(file=sys.stderr)
+        split_dir, split_error = None, f"{type(exc).__name__}: {exc}"
     split_timings: dict[str, float] = {}
     split_first: dict[str, float] = {}
     if split_dir:
@@ -435,6 +440,7 @@ def main() -> None:
         "extended_queries": extended,
         "extended_total": round(sum(extended.values()), 3),
         "extended_layout": "split" if split_dir else "raw",
+        "split_copy_error": split_error,
         # Cold cost per query (round-13 verdict item 1): DataFrame
         # build (eager coordinator jobs) + FIRST noop execution (all
         # cache fills) — the spend the steady best-of-N deliberately
@@ -900,13 +906,11 @@ def _headline_cluster_main() -> None:
     def run_headline(spark) -> dict[str, float]:
         spark.sparkContext.setLogLevel("ERROR")
         spark.range(1_000_000).selectExpr("sum(id)").collect()
-        split_dir = _split_copy_dir(sf_dir)
-        run_dir = split_dir or sf_dir
-        if split_dir:
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes",
-                str(_SPLIT_MAX_PARTITION_BYTES),
-            )
+        run_dir = _split_copy_dir(sf_dir)
+        spark.conf.set(
+            "spark.sql.files.maxPartitionBytes",
+            str(_SPLIT_MAX_PARTITION_BYTES),
+        )
         out: dict[str, float] = {}
         for name in names:
             out[name] = _time_query(registry[name].fn(spark, run_dir), 3)

@@ -22,7 +22,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from ingestor_etl_spark.plans.layout import release_caches
-from ingestor_etl_spark.queries import load_all
+from ingestor_etl_spark.queries import _vec_np, load_all
 from ingestor_etl_spark.queries import vector_ops as vo
 
 SF001 = "/root/testdata/sf0.01"
@@ -147,7 +147,7 @@ def test_big_book_strategy_equivalence(spark):
     }
     npv = {
         r["vec_id"]: r["lid"]
-        for r in vo._np_assign_col(
+        for r in _vec_np.np_assign_col(
             et.select("vec_id", "nv"), {(): book}, (), "nv", "lid"
         ).collect()
     }
@@ -161,7 +161,7 @@ def test_big_book_strategy_equivalence(spark):
     }
     npn = {
         r["vec_id"]: list(r["rc"])
-        for r in vo._np_topn_col(
+        for r in _vec_np.np_topn_col(
             et.select("vec_id", "nv"), book, "nv", 4, "rc"
         ).collect()
     }
@@ -193,7 +193,7 @@ def test_big_book_strategy_equivalence(spark):
     }
     npk = {
         (r["vec_id"], r["sub"]): r["cid"]
-        for r in vo._np_assign_col(
+        for r in _vec_np.np_assign_col(
             subs, pq_books, ("sub",), "sv", "cid"
         ).collect()
     }

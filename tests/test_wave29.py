@@ -19,6 +19,8 @@ Pins here:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ingestor_etl_spark.plans.layout import release_caches
@@ -71,3 +73,62 @@ def test_memo_hit_equals_memo_miss(spark):
         release_caches()
         assert vo._COORD_STATS["misses"] == warm_stats_before, name
         assert cold == warm, name
+
+
+_IVF_FAMILY = (
+    "ann_ivf_pq",
+    "ann_ivf_pq_residual",
+    "ann_ivf_hamming",
+    "pq_distortion_eval",
+    "ivf_nprobe_whatif",
+    "ivf_balance_profile",
+)
+
+
+def test_ivf_family_shares_trained_books(spark, sf_dir):
+    """Default-path twin of the scoreboard budget, over the six
+    IVF-family builders at identity geometry: one coarse book for
+    all of them, every stored key computed exactly once, and
+    pq_distortion_eval's trained book is the very pq_raw_books entry
+    ann_ivf_pq stored (it only adds its iteration-0 seed book)."""
+    reg = load_all()
+    _reset_memo()
+    reg["ann_ivf_pq"].fn(spark, sf_dir)
+    raw = [k for k in vo._COORD_MEMO if k[0] == "pq_raw_books"]
+    assert len(raw) == 1 and raw[0][-1] == vo.PQ_ITERS, raw
+    for name in _IVF_FAMILY[1:]:
+        before = set(vo._COORD_MEMO)
+        hits = vo._COORD_STATS["hits"]
+        reg[name].fn(spark, sf_dir)
+        release_caches()
+        if name == "pq_distortion_eval":
+            assert vo._COORD_STATS["hits"] == hits + 1, vo._COORD_STATS
+            assert set(vo._COORD_MEMO) - before == {(*raw[0][:-1], 0)}
+    release_caches()
+    book_keys = [k for k in vo._COORD_MEMO if k[0] == "ivf_book"]
+    assert len(book_keys) == 1, book_keys
+    assert vo._COORD_STATS["misses"] == len(vo._COORD_MEMO), vo._COORD_STATS
+
+
+@pytest.fixture(scope="module")
+def gapped_dir(spark, tmp_path_factory):
+    """sf0.001 embeddings without vec_id 150, one of CENTROID_IDS."""
+    d = str(tmp_path_factory.mktemp("gapped"))
+    src = os.path.join(os.path.dirname(SF001), "sf0.001", "embeddings.parquet")
+    spark.read.parquet(src).where("vec_id <> 150").write.parquet(
+        f"{d}/embeddings.parquet"
+    )
+    return d
+
+
+@pytest.mark.parametrize("name", ["ivf_balance_profile", "ann_ivf_pq"])
+def test_missing_seed_row_raises(spark, gapped_dir, name):
+    """A corpus missing a requested seed row must fail loudly, not
+    train a smaller coarse book — also under ``python -O``, and also
+    for the builders that always seed from CENTROID_IDS."""
+    reg = load_all()
+    try:
+        with pytest.raises(ValueError, match="seed filter matched"):
+            reg[name].fn(spark, gapped_dir)
+    finally:
+        release_caches()
