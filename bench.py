@@ -1,12 +1,15 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness for the registered queries and the protocol path.
 
-Prints ONE JSON line:
+The modes are listed in _USAGE below (`python bench.py --help` prints
+it). Every mode prints ONE JSON line on stdout and nothing else. The
+default mode reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+and prints
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is executed to completion with a noop sink (full compute,
-no driver-side materialization cost), timed after a warm-up of the
-session JVM.
+no driver-side materialization cost) and timed by _time_query_cold,
+after a warm-up job on the session JVM. Ingest and streaming are
+measured by perfbench/ (see perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -44,8 +47,8 @@ HEADLINE = [
 ]
 
 
-# Round-2 additions benched separately so the headline total stays
-# comparable round-over-round (same 17 queries as BASELINE).
+# Benched separately so the headline total stays comparable with
+# BASELINE (the same 17 queries).
 EXTENDED = [
     "pii_redact",
     "url_dedup",
@@ -56,7 +59,6 @@ EXTENDED = [
     "multimodal_frame_sample",
     "sql_passthrough",
     "j7_display_filter",
-    # round-3 additions
     "segment_dedup",
     "bm25_search",
     "unigram_logprob",
@@ -71,7 +73,6 @@ EXTENDED = [
     "key_skew_profile",
     "eval_holdout_split",
     "dataset_card",
-    # round-4 additions
     "snapshot_diff",
     "quality_classifier",
     "canonical_docs",
@@ -86,7 +87,6 @@ EXTENDED = [
     "dedup_report",
     "pcap_flow_stats",
     "salted_hot_agg",
-    # round-4 waves 3-5
     "events_gapfill",
     "cms_heavy_hitters",
     "source_reputation",
@@ -118,16 +118,15 @@ EXTENDED = [
     "math_functions",
     "conditional_functions",
     "curation_pipeline",
-    # wave 11: similarity joins + quality signals. Note on the two
-    # join ops: the synthetic testdata is their worst case (50-word
-    # vocabulary -> dense shingle df; 99%-duplicated part names ->
-    # maximal block collisions); see SCALING.md §19.
+    # The synthetic testdata is the worst case of the next two
+    # similarity joins (50-word vocabulary -> dense shingle df;
+    # 99%-duplicated part names -> maximal block collisions); see
+    # SCALING.md §19.
     "prefix_filter_join",
     "entity_resolution",
     "gopher_rules",
     "char_entropy",
     "halflife_decay",
-    # round-5 additions
     "multimodal_decode_image",
     "tfidf_cosine_pairs",
     "funnel_conversion",
@@ -155,7 +154,6 @@ EXTENDED = [
     "supplier_lead_time",
     "clv_by_cohort",
     "source_lang_purity",
-    # round-6 additions + reworked-in-r6 operators now tracked
     "exact_substring_dedup",
     "lsh_band_whatif",
     "mixture_token_allocation",
@@ -166,7 +164,6 @@ EXTENDED = [
     "hard_negative_mining",
     "embedding_near_dup",
     "pcap_http_ocs_linked",
-    # round-7 additions
     "stream_cms_cells_parity",
     "stream_zscore_parity",
     "exact_substring_extend",
@@ -175,19 +172,14 @@ EXTENDED = [
     "pcap_tshark_fields",
     "minhash_contamination",
     "dedup_threshold_sweep",
-    # round-8 addition
     "xml_ingest",
-    # round-9 addition
     "ann_ivf_pq",
-    # round-10 additions
     "ann_ivf_pq_residual",
     "pq_distortion_eval",
     "ivf_nprobe_whatif",
     "ivf_balance_profile",
-    # round-11 additions: the scoreboard (the heaviest plan in the
-    # repo — composes every ANN variant plus the exact leg; timed so
-    # its cost stays pinned round-over-round) and the binary
-    # Hamming-sketch ANN
+    # the scoreboard is the heaviest plan in the repo: it composes
+    # every ANN variant plus the exact leg
     "ann_quality_scoreboard",
     "ann_hamming_topk",
     "hamming_pool_whatif",
@@ -195,12 +187,12 @@ EXTENDED = [
 
 
 def _layout_note(sf_dir: str) -> str | None:
-    """Report the input parquet layout: round-3 testdata ships ONE
-    row group per table, which Spark cannot split — every scan (and
-    its fused partial aggregation) is single-task no matter how many
+    """Report the input parquet layout: the testdata ships ONE row
+    group per table, which Spark cannot split — every scan (and its
+    fused partial aggregation) is single-task no matter how many
     cores exist, unlike the multi-row-group layout BASELINE.md's
     numbers were measured on. Recorded in the bench JSON so
-    round-over-round comparisons are read against the right input
+    comparisons between runs are read against the right input
     layout. (At cluster scale inputs are many files; this is a
     test-rig artifact, and the auto-compaction experiments in
     SCALING.md §layout document why we do not rewrite the read-only
@@ -280,32 +272,20 @@ def _split_copy_dir(sf_dir: str) -> str:
 _SPLIT_MAX_PARTITION_BYTES = 4 * 1024 * 1024
 
 
-def _time_query(df, n_runs: int) -> float:
-    """Warm-up (amortizes whole-stage-codegen JIT) + best-of-N noop
-    writes (robust to transient host contention on shared VMs —
-    measured ±9%/±25% run-to-run swings on identical code;
-    SCALING.md "Bench drift")."""
-    df.write.format("noop").mode("overwrite").save()
-    best = float("inf")
-    for _ in range(n_runs):
-        start = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - start)
-    return round(best, 3)
-
-
 def _time_query_cold(build_thunk, n_runs: int) -> tuple[float, float]:
-    """(steady_best, first_run) — round-14 (round-13 verdict item 1).
+    """Time one query: ``(steady, first)`` in seconds.
 
-    The steady number is methodology-identical to _time_query
-    (warm-up + best-of-N noop writes), so the ``queries`` dict stays
-    comparable round-over-round. first_run_sec ADDITIONALLY times the
-    COLD cost the warm-up used to hide: DataFrame construction (eager
-    coordinator jobs — training censuses, plan-shape probes) PLUS the
-    first noop execution (which populates every materialize() cache).
-    Nothing is prefetched outside these two timed spans: the caches a
-    query needs are filled inside first_run_sec or inside the timed
-    steady runs, never off-clock."""
+    ``first`` is the cold cost: DataFrame construction (eager
+    coordinator jobs — training censuses, plan-shape probes) plus the
+    first noop execution, which fills every materialize() cache and
+    amortizes whole-stage-codegen JIT. Nothing is prefetched outside
+    the timed spans: the caches a query needs are filled inside
+    ``first`` or inside the steady runs, never off-clock.
+
+    ``steady`` is the best of ``n_runs`` further noop writes. Best-of
+    is the right estimator for a fixed workload on a shared host:
+    contention only ever adds time, and run-to-run swings of ±9-25%
+    on identical code are measured (SCALING.md "Bench drift")."""
     t0 = time.perf_counter()
     df = build_thunk()
     build = time.perf_counter() - t0
@@ -320,50 +300,46 @@ def _time_query_cold(build_thunk, n_runs: int) -> tuple[float, float]:
     return round(best, 3), round(first, 3)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    registry = load_all()
-    # One-line-JSON stdout purity (round-13 verdict item 2): the
-    # driver captures stdout and parses the single JSON line. TWO
-    # polluters exist and both are disabled for the bench session:
-    # (a) console progress bars; (b) the ACTUAL r12-parse-killer,
-    # reproduced this round — JVM unified logging writes gc warnings
-    # to STDOUT under memory pressure ("[262.5s][warning][gc,alloc]
-    # ... Retried waiting for GCLocker too often"), observed
-    # mid-round on a heavy --jdecomp run. -Xlog:all=warning:stderr
-    # keeps the warnings but moves them off the parsed stream.
+def _session(app_name: str):
+    """The bench session, warmed up with a trivial job (JVM start and
+    parquet footer cache stay off every timed span).
+
+    stdout must carry only the mode's one JSON line, so console
+    progress bars are off and JVM unified logging goes to stderr: by
+    default the JVM writes GC warnings ("[warning][gc,alloc] ...
+    Retried waiting for GCLocker too often") to stdout under memory
+    pressure, in the middle of the line a caller parses."""
     spark = get_spark(
-        "ingestor-etl-spark-bench",
+        app_name,
         **{
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.extraJavaOptions": "-Xlog:all=warning:stderr",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm up the JVM + parquet footer cache with a trivial job.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    return spark
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    registry = load_all()
+    spark = _session("ingestor-etl-spark-bench")
 
     names = [n for n in HEADLINE if n in registry]
 
-    # Protocol throughput, measurement 1 of 2 (round-6 verdict item
-    # 8): the inner loop is already best-of-3, but a contended host
-    # window spanning one invocation still printed a 40% dip in the
-    # r6 driver run. Measuring once HERE and once at the END of the
-    # ~10-minute bench and reporting the better run means a dip needs
-    # sustained whole-bench contention to show at all; both runs are
-    # recorded so drift stays visible.
+    # Protocol throughput, measurement 1 of 2: the inner loop is
+    # already best-of-3, but a contended host window spanning one
+    # invocation has printed a 40% dip. Measuring once here and once
+    # at the end of the bench and reporting the better run means a dip
+    # needs sustained whole-bench contention to show at all; both runs
+    # are recorded so drift stays visible.
     protocol_first = bench_protocol_throughput(spark)
 
-    # Raw-layout headline: the driver's own parquet (one row group
-    # per table → single-task scans). Comparable round-over-round
-    # with BENCH_r01-r04. Round 14 additionally records
-    # first_run_sec per query (build + first execution, i.e. the
-    # cold cost including every cache fill — round-13 verdict item
-    # 1); the steady best-of-N methodology and the ``queries`` /
-    # ``raw_layout_queries`` / ``extended_queries`` dicts are
-    # unchanged and stay comparable round-over-round.
+    # Raw-layout headline: the testdata's own parquet (one row group
+    # per table → single-task scans). Each query reports its steady
+    # time and its cold first run (see _time_query_cold).
     raw_timings: dict[str, float] = {}
     raw_first: dict[str, float] = {}
     for name in names:
@@ -377,7 +353,7 @@ def main() -> None:
     # exists at cluster scale), scans fanned out via a runtime
     # maxPartitionBytes override. Reported as the PRIMARY number;
     # the raw numbers + delta quantify the test-rig layout artifact
-    # permanently (round-4 verdict item 5, SCALING.md §15).
+    # (SCALING.md §15).
     # A failed copy falls back to the raw layout, loudly: traceback on
     # stderr, error in the JSON line.
     try:
@@ -441,11 +417,9 @@ def main() -> None:
         "extended_total": round(sum(extended.values()), 3),
         "extended_layout": "split" if split_dir else "raw",
         "split_copy_error": split_error,
-        # Cold cost per query (round-13 verdict item 1): DataFrame
-        # build (eager coordinator jobs) + FIRST noop execution (all
-        # cache fills) — the spend the steady best-of-N deliberately
-        # amortizes away. Additive keys; the steady dicts above are
-        # methodology-unchanged.
+        # Cold cost per query: DataFrame build (eager coordinator
+        # jobs) + first noop execution (all cache fills) — the spend
+        # the steady best-of-N deliberately amortizes away.
         "first_run_queries": split_first or raw_first,
         "first_run_total": round(
             sum((split_first or raw_first).values()), 3
@@ -458,12 +432,10 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     line = json.dumps(result)
-    # One-line-JSON contract hardening (round-13 verdict item 2): the
-    # r12 driver capture failed to parse an apparently valid line —
-    # make the line the ONLY stdout the process emits, flushed in one
-    # write (console progress is off for this session, Spark logs go
-    # to stderr), and drop a byte-identical copy where the env asks so
-    # a mangled capture can be diagnosed against it.
+    # The line is the only stdout the process emits, flushed in one
+    # write (see _session). A caller that captures stdout can set
+    # SPARK_GRAFT_BENCH_COPY to get a byte-identical copy, so a
+    # mangled capture can be diagnosed against it.
     copy_path = os.environ.get("SPARK_GRAFT_BENCH_COPY")
     if copy_path:
         with open(copy_path, "w") as fh:
@@ -522,19 +494,16 @@ def bench_protocol_throughput(
                 fh.write(g.pcap(frames))
 
     n_messages = n_files * txns_per_file * 2
-    df = correlate_diameter(
-        decode_diameter(expand_l4(read_pcap(spark, cap_dir + "/*.pcap")))
+    best, _ = _time_query_cold(
+        lambda: correlate_diameter(
+            decode_diameter(expand_l4(read_pcap(spark, cap_dir + "/*.pcap")))
+        ),
+        3,
     )
-    df.write.format("noop").mode("overwrite").save()  # warm-up
-    best = float("inf")
-    for _ in range(3):
-        start = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - start)
     return {
         "pipeline": "pcap->decode->correlate (diameter)",
         "n_messages": n_messages,
-        "sec": round(best, 3),
+        "sec": best,
         "msgs_per_sec": round(n_messages / best),
     }
 
@@ -542,10 +511,6 @@ def bench_protocol_throughput(
 # ------------------------------------------------------ sf1 scale check
 SF1_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".sf1data", "sf1")
 _SF1_REPS = 10  # sf1 = 10 × sf0.1
-
-
-def _gen_sf1(spark) -> None:
-    _gen_scaled(spark, SF1_DIR, _SF1_REPS)
 
 
 def _gen_scaled(spark, out_dir: str, n_reps: int) -> None:
@@ -601,26 +566,20 @@ def _gen_scaled(spark, out_dir: str, n_reps: int) -> None:
 
 
 def _sf1_main() -> None:
-    """`bench.py --sf1`: the round-5 verdict's 10× scale checkpoint —
-    run the slowest sf0.1 queries at sf1 (generated on first
-    use) and report per-query times at both scales plus the scaling
-    exponent log10(t_sf1/t_sf0.1) (1.0 = perfectly linear). Every
-    query — knn_graph included since round 9 — runs the REGISTERED
-    plan verbatim with zero bench-side parameters: knn_graph and
-    embedding_near_dup both derive their scale knobs (n_planes,
-    bucket_cap) from in-query censuses (auto_scale). Round-7
-    extends the set with the round-6/7 heavies (exact_substring_dedup,
-    lsh_band_whatif, containment_pairs, tfidf_cosine_pairs,
-    embedding_near_dup — round-6 verdict item 5)."""
+    """`bench.py --sf1`: the 10× scale checkpoint — run the slowest
+    sf0.1 queries at sf1 (generated on first use) and report per-query
+    times at both scales plus the scaling exponent
+    log10(t_sf1/t_sf0.1) (1.0 = perfectly linear). Every query runs
+    the REGISTERED plan verbatim with zero bench-side parameters:
+    knn_graph and embedding_near_dup both derive their scale knobs
+    (n_planes, bucket_cap) from in-query censuses (auto_scale)."""
     from ingestor_etl_spark.queries.vector_ops import KNN_PLANES, _knn_planes
 
     registry = load_all()
-    spark = get_spark("ingestor-etl-spark-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = _session("ingestor-etl-spark-sf1")
 
     if not os.path.exists(os.path.join(SF1_DIR, "lineitem.parquet")):
-        _gen_sf1(spark)
+        _gen_scaled(spark, SF1_DIR, _SF1_REPS)
 
     names = [
         "minhash_jaccard_estimate",
@@ -628,37 +587,34 @@ def _sf1_main() -> None:
         "prefix_filter_join",
         "dup_graph_degree_stats",
         "knn_graph",
-        # round-6/7 heavies (round-6 verdict item 5)
         "exact_substring_dedup",
         "lsh_band_whatif",
         "containment_pairs",
         "tfidf_cosine_pairs",
         "embedding_near_dup",
-        # round-8 (round-7 verdict item 3): the re-planned jaccard
-        # pair consumers + the remaining round-7 additions + the
-        # curation E2E
+        # the jaccard pair consumers and the curation end-to-end
         "ngram_jaccard_pairs",
         "cross_source_dup_overlap",
         "dedup_threshold_sweep",
         "exact_substring_extend",
         "minhash_contamination",
         "curation_pipeline",
-        # round-10 (round-9 verdict item 5): the IVF+PQ stack — new
-        # in r9, quantizer-trained in r10 (6 extra training passes
-        # over the corpus, all broadcast/argmin projections, so the
-        # exponent should sit well under 1: the per-round driver
-        # round-trips are scale-constant)
+        # the IVF+PQ stack: 6 training passes over the corpus, all
+        # broadcast/argmin projections, so the exponent should sit
+        # well under 1 (the per-iteration driver round-trips are
+        # scale-constant)
         "ann_ivf_pq",
-        # round-10: the residual-encoding twin (IVFADC proper) —
-        # same broadcast shape plus one assign+subtract corpus pass
+        # the residual-encoding twin (IVFADC proper): same broadcast
+        # shape plus one assign+subtract corpus pass
         "ann_ivf_pq_residual",
     ]
 
     def run_at(sf_dir: str) -> dict[str, float]:
         out = {}
         for name in names:
-            df = registry[name].fn(spark, sf_dir)
-            out[name] = _time_query(df, 2)
+            out[name], _ = _time_query_cold(
+                lambda: registry[name].fn(spark, sf_dir), 2
+            )
             release_caches()
         return out
 
@@ -667,10 +623,9 @@ def _sf1_main() -> None:
     t01 = run_at("/root/testdata/sf0.1")
     t1 = run_at(SF1_DIR)
 
-    # 10× protocol throughput (round-7 verdict item 5): same
-    # decode+correlate pipeline at 80 files / 400k messages —
-    # embarrassingly parallel decode + one keyed shuffle, so the
-    # exponent should sit at ≈1.
+    # 10× protocol throughput: same decode+correlate pipeline at 80
+    # files / 400k messages — embarrassingly parallel decode + one
+    # keyed shuffle, so the exponent should sit at ≈1.
     proto01 = bench_protocol_throughput(spark)
     release_caches()
     proto1 = bench_protocol_throughput(spark, n_files=80)
@@ -678,7 +633,7 @@ def _sf1_main() -> None:
     # the knn_note reports the census inputs the registered query
     # actually sees (distinct-vector counts OBSERVED in the two
     # corpora), not nominal constants that go stale if the generated
-    # testdata or _SF1_REPS change (round-9 advice)
+    # testdata or _SF1_REPS change
     n_distinct01 = (
         spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         .select("embedding").distinct().count()
@@ -727,8 +682,8 @@ SF3_DIR = os.path.join(
 
 
 def _jdecomp_main(include_sf3: bool = False) -> None:
-    """`bench.py --jdecomp` (round-8 verdict item 3): bound the
-    jaccard-family superlinearity. BENCH_SF1 pins the trio's sf0.1→sf1
+    """`bench.py --jdecomp`: bound the jaccard-family
+    superlinearity. BENCH_SF1 pins the trio's sf0.1→sf1
     exponents at 1.158/1.136/1.006; SCALING §31 attributes the excess
     to hash-aggregate group pressure on the pair relation. This mode
     adds the sf0.3 scale point and decomposes the shared core
@@ -750,12 +705,11 @@ def _jdecomp_main(include_sf3: bool = False) -> None:
     state. Exponent pairs over the two intervals (0.1→0.3, 0.3→1)
     further separate a smooth power law from a memory threshold.
 
-    ``--jdecomp --sf3`` (round-10 verdict item 7) extends the ladder
-    one more decade past sf0.3: a 30×-sf0.1 replica set (~350 MB
-    parquet) adds the sf1→sf3 exponent interval, testing whether the
-    per-row agg constant's growth flattens — the last inferential
-    step in the 100 TB extrapolation that §33 + JDECOMP_CLUSTER
-    otherwise make by argument."""
+    ``--jdecomp --sf3`` extends the ladder one more decade past sf0.3:
+    a 30×-sf0.1 replica set (~350 MB parquet) adds the sf1→sf3
+    exponent interval, testing whether the per-row agg constant's
+    growth flattens — the last inferential step in the 100 TB
+    extrapolation of SCALING.md §33."""
     import math
 
     from pyspark.sql import functions as F
@@ -767,9 +721,7 @@ def _jdecomp_main(include_sf3: bool = False) -> None:
     )
 
     registry = load_all()
-    spark = get_spark("ingestor-etl-spark-jdecomp")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = _session("ingestor-etl-spark-jdecomp")
 
     if not os.path.exists(os.path.join(SF1_DIR, "documents.parquet")):
         _gen_scaled(spark, SF1_DIR, _SF1_REPS)
@@ -800,12 +752,11 @@ def _jdecomp_main(include_sf3: bool = False) -> None:
         pairagg = joined.groupBy(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         ).agg(F.count(F.lit(1)).alias("n_shared"))
-        row["t_join_count"] = _time_query(join_count, 2)
-        # the count doubles as _time_query's warm-up run, so the
-        # heaviest relation in the mode executes 3× (count + 2 timed)
-        # instead of 4× (round-9 advice); the timed best-of-2 noop
-        # writes are unchanged, keeping numbers comparable with
-        # JDECOMP.json r9
+        row["t_join_count"], _ = _time_query_cold(lambda: join_count, 2)
+        # Not _time_query_cold: the groups count doubles as the
+        # warm-up run, so the heaviest relation in the mode executes
+        # 3× (count + 2 timed) instead of 4×; the timed best-of-2 noop
+        # writes match _time_query_cold's steady runs.
         row["groups"] = pairagg.count()
         best = float("inf")
         for _ in range(2):
@@ -815,7 +766,9 @@ def _jdecomp_main(include_sf3: bool = False) -> None:
         row["t_pairagg"] = round(best, 3)
         release_caches()
         for name in trio:
-            row[f"t_{name}"] = _time_query(registry[name].fn(spark, sf_dir), 2)
+            row[f"t_{name}"], _ = _time_query_cold(
+                lambda: registry[name].fn(spark, sf_dir), 2
+            )
             release_caches()
         out[label] = row
 
@@ -854,416 +807,18 @@ def _jdecomp_main(include_sf3: bool = False) -> None:
     )
 
 
-# ------------------------------- headline on two executor JVMs
-def _headline_cluster_main() -> None:
-    """`bench.py --headline-cluster`: run the 17-query headline set
-    on local-cluster[2,16,8192] — two REAL executor JVMs with
-    process-isolated shuffle serialization — next to a same-day
-    local[32] control, both on the split-layout copy (the primary
-    headline rig). §33's round-10 addendum measured one query family
-    under a split heap; this pins the WHOLE headline: every plan
-    that survives here pays real inter-process exchange costs, so a
-    query whose local[32] speed depended on in-process shuffle
-    shortcuts would show an outsized cluster delta. Expected shape:
-    a roughly uniform topology overhead on shuffle-bound queries
-    (the two-process rig serializes exchanges a real fleet also
-    serializes, but with only 2 JVMs to amortize) and parity on
-    scan/broadcast-bound ones.
-
-    The pandas-UDF queries (multimodal_features,
-    pcap_diameter_correlated) need the package importable in the
-    executors' python workers — shipped via addPyFile of a package
-    zip, exactly like __spark_entry__._ensure_shipped does for the
-    grading driver."""
-    import tempfile
-    import zipfile
-
-    registry = load_all()
-    names = [n for n in HEADLINE if n in registry]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def ship_pkg(spark) -> None:
-        zip_path = os.path.join(
-            tempfile.gettempdir(), "ingestor_etl_spark_pkg.zip"
-        )
-        pkg_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "ingestor_etl_spark"
-        )
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, dirs, files in os.walk(pkg_dir):
-                dirs[:] = [d for d in dirs if d != "__pycache__"]
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        zf.write(
-                            full,
-                            os.path.relpath(
-                                full, os.path.dirname(pkg_dir)
-                            ),
-                        )
-        spark.sparkContext.addPyFile(zip_path)
-
-    def run_headline(spark) -> dict[str, float]:
-        spark.sparkContext.setLogLevel("ERROR")
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
-        run_dir = _split_copy_dir(sf_dir)
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            str(_SPLIT_MAX_PARTITION_BYTES),
-        )
-        out: dict[str, float] = {}
-        for name in names:
-            out[name] = _time_query(registry[name].fn(spark, run_dir), 3)
-            release_caches()
-        return out
-
-    control = None
-    if os.environ.get("SPARK_GRAFT_SPLIT_CONTROL", "1") != "0":
-        spark = get_spark("ingestor-etl-spark-headline-control")
-        control = run_headline(spark)
-        spark.stop()
-
-    os.environ["SPARK_GRAFT_ON_CLUSTER"] = "1"
-    try:
-        spark = get_spark(
-            "ingestor-etl-spark-headline-cluster",
-            **{
-                "spark.master": "local-cluster[2,16,8192]",
-                "spark.executor.memory": "8192m",
-            },
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_ON_CLUSTER"]
-    ship_pkg(spark)
-    cluster = run_headline(spark)
-    spark.stop()
-
-    result = {
-        "metric": "headline_split_vs_cluster",
-        "unit": "sec",
-        "value": round(sum(cluster.values()), 3),
-        "sf": 0.1,
-        "control_local32_total": (
-            round(sum(control.values()), 3) if control else None
-        ),
-        "control_local32": control,
-        "cluster_2x16_8g": cluster,
-        "ratio": (
-            {
-                n: round(cluster[n] / control[n], 2)
-                for n in names
-            }
-            if control
-            else None
-        ),
-    }
-    print(json.dumps(result))
-
-
-# ------------------------------- split-heap agg-constant check
-def _jdecomp_cluster_main() -> None:
-    """`bench.py --jdecomp-cluster` (round-9 verdict item 3): turn
-    §33's "distributes away at cluster scale" ARGUMENT into a
-    MEASUREMENT. §33 bounds the jaccard trio's superlinearity to a
-    +36%/decade per-row final-agg constant attributed to 103M-group
-    hash-map pressure at a FIXED single-JVM heap; the distribution
-    claim predicts that splitting the same total heap across more
-    executor JVMs (each holding half the group state) moves the sf1
-    per-row constant back toward the sf0.1 value.
-
-    This mode runs the sf1 decomposition point twice in one process,
-    same day, same box:
-    - control: the standard bench session (local[32], one 8g JVM —
-      exactly the JDECOMP.json rig);
-    - split: local-cluster[2,16,4096] — the SAME 32 cores and the
-      SAME 8g of total executor heap, split across two executor
-      JVMs, so the only variable is how many JVMs hold the final
-      aggregate's hash state.
-    Reported per config: t_join_count (production only), t_pairagg
-    (production + group state), groups, and the §33 constants
-    t_pairagg/mass and (t_pairagg − t_join_count)/mass in ns/row."""
-    from pyspark.sql import functions as F
-
-    from ingestor_etl_spark.queries.dedup_ops import (
-        _jaccard_census,
-        _jaccard_sets,
-        _shingled,
-    )
-
-    def sf1_point(spark) -> dict:
-        sets = _jaccard_sets(spark, _shingled(spark, SF1_DIR))
-        _, mass, _ = _jaccard_census(sets)
-        el = sets.select("doc_id", "sz", F.explode("shingles").alias("s"))
-        a, b = el.alias("a"), el.alias("b")
-        joined = a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        join_count = joined.agg(F.count(F.lit(1)).alias("n"))
-        pairagg = joined.groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        ).agg(F.count(F.lit(1)).alias("n_shared"))
-        row: dict[str, object] = {"mass_join_rows": mass}
-        row["t_join_count"] = _time_query(join_count, 2)
-        row["groups"] = pairagg.count()  # doubles as the warm-up
-        best = float("inf")
-        for _ in range(2):
-            start = time.perf_counter()
-            pairagg.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - start)
-        row["t_pairagg"] = round(best, 3)
-        row["agg_ns_per_row"] = round(row["t_pairagg"] / mass * 1e9, 1)
-        row["delta_ns_per_row"] = round(
-            (row["t_pairagg"] - row["t_join_count"]) / mass * 1e9, 1
-        )
-        release_caches()
-        return row
-
-    # two split variants, selected by SPARK_GRAFT_SPLIT_MB:
-    # - 4096 (default): same TOTAL heap split in two — holds
-    #   groups-per-heap-GB constant, isolating the JVM-size/GC term;
-    # - 8192: two standard-heap executors — groups-per-heap-GB
-    #   HALVES, which is what actually happens when the fleet grows
-    #   with the data (the §33 distribution claim).
-    # SPARK_GRAFT_SPLIT_CONTROL=0 skips the control re-run when a
-    # same-day control measurement already exists.
-    mem_mb = int(os.environ.get("SPARK_GRAFT_SPLIT_MB", "4096"))
-    control = None
-    if os.environ.get("SPARK_GRAFT_SPLIT_CONTROL", "1") != "0":
-        spark = get_spark("ingestor-etl-spark-jdecomp-control")
-        spark.sparkContext.setLogLevel("ERROR")
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
-        if not os.path.exists(os.path.join(SF1_DIR, "documents.parquet")):
-            _gen_scaled(spark, SF1_DIR, _SF1_REPS)
-        control = sf1_point(spark)
-        spark.stop()
-
-    os.environ["SPARK_GRAFT_ON_CLUSTER"] = "1"
-    try:
-        spark = get_spark(
-            "ingestor-etl-spark-jdecomp-split",
-            **{
-                "spark.master": f"local-cluster[2,16,{mem_mb}]",
-                "spark.executor.memory": f"{mem_mb}m",
-            },
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_ON_CLUSTER"]
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    split = sf1_point(spark)
-    spark.stop()
-
-    print(
-        json.dumps(
-            {
-                "metric": "jdecomp_split_heap",
-                "unit": "sec",
-                "value": split["t_pairagg"],
-                "sf": 1,
-                "control_local32_8g": control,
-                f"split_local_cluster_2x16_{mem_mb}m": split,
-                "sf01_reference_ns_per_row": 40.6,
-            }
-        )
-    )
-
-
-# ---------------------------------------------- near-dup cap haircut
-def _haircut_main() -> None:
-    """`bench.py --haircut` (round-8 verdict item 4): measure
-    embedding_near_dup's bucket-cap recall haircut at sf1, where the
-    candidate-mass census actually engages the cap (5.5e7 > 10e6 —
-    it can never fire at oracle scale). Compares the registered
-    auto_scale output (capped) against the uncut contract at the
-    SAME census-chosen plane count (bucket_cap=None), per cos_sim
-    band. capped ⊆ uncapped is pinned by test_wave24; this records
-    the dropped-pair fraction next to the sf0.1 figure in
-    SCALING.md."""
-    from pyspark.sql import functions as F
-
-    from ingestor_etl_spark.queries.vector_ops import (
-        _as_double,
-        _near_dup_from,
-        _near_dup_planes,
-    )
-
-    spark = get_spark("ingestor-etl-spark-haircut")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    if not os.path.exists(os.path.join(SF1_DIR, "embeddings.parquet")):
-        _gen_scaled(spark, SF1_DIR, _SF1_REPS)
-
-    e = (
-        spark.read.parquet(f"{SF1_DIR}/embeddings.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    )
-
-    # round-9 verdict item 4: the organic sf1 corpus has no pairs
-    # above cos 0.8, so §34's key claim ("high-confidence pairs
-    # collide in several tables and survive the cap") was derived,
-    # not observed. Plant 500 partners at cosine 0.85–0.95 — EXACT
-    # by construction: w = c·nv + sqrt(1−c²)·û with û the fixed
-    # direction r Gram-Schmidt-orthogonalized against nv, so
-    # cos(v, w) = c — one partner per base (vec_id ≡ 21 mod 40),
-    # partner ids offset by 10⁶, c per pair from a deterministic
-    # LCG over [0.85, 0.95). The augmented corpus then reports the
-    # planted pairs' survival under the census-engaged cap next to
-    # the organic band table.
-    from ingestor_etl_spark.queries.vector_ops import _dot as _vdot
-
-    PLANT_OFF = 1_000_000
-    r_dir = F.array(
-        *[
-            F.lit(((k * 1103515245 + 12345) % 2001 - 1000) / 1000.0)
-            for k in range(64)
-        ]
-    )
-    nrm = F.sqrt(_vdot(F.col("v"), F.col("v")))
-    ct = 0.85 + F.pmod(F.col("vec_id") * 2654435761, F.lit(1000)).cast(
-        "double"
-    ) / 10000.0
-    planted = (
-        e.where(F.col("vec_id") % 40 == 21)
-        .select(
-            "vec_id",
-            F.transform("v", lambda x: x / nrm).alias("nv"),
-            ct.alias("ct"),
-        )
-        .withColumn("rd", _vdot(r_dir, F.col("nv")))
-        .withColumn(
-            "u",
-            F.zip_with(r_dir, F.col("nv"), lambda r, n: r - F.col("rd") * n),
-        )
-        .withColumn("un", F.sqrt(_vdot(F.col("u"), F.col("u"))))
-        .select(
-            (F.col("vec_id") + PLANT_OFF).alias("vec_id"),
-            F.zip_with(
-                F.col("nv"),
-                F.col("u"),
-                lambda n, uu: F.col("ct") * n
-                + F.sqrt(1 - F.col("ct") * F.col("ct")) * uu / F.col("un"),
-            ).alias("v"),
-        )
-    )
-    n_planted = planted.count()
-    e = e.unionByName(planted)
-
-    def planted_found(df) -> int:
-        return df.where(
-            (F.col("vec_b") == F.col("vec_a") + PLANT_OFF)
-            & (F.col("vec_a") % 40 == 21)
-            & (F.col("cos_sim") >= 0.8)
-        ).count()
-
-    def banded(df) -> dict[str, int]:
-        rows = (
-            df.groupBy(
-                F.when(F.col("cos_sim") >= 0.8, "0.80-1.00")
-                .when(F.col("cos_sim") >= 0.6, "0.60-0.80")
-                .otherwise("0.45-0.60")
-                .alias("band")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        return {r["band"]: r["n"] for r in rows}
-
-    from ingestor_etl_spark.plans.layout import materialize
-
-    n_planes = _near_dup_planes(e.select("v").distinct().count())
-    capped_df = materialize(_near_dup_from(e, auto_scale=True))
-    capped, planted_capped = banded(capped_df), planted_found(capped_df)
-    release_caches()
-    uncapped_df = materialize(
-        _near_dup_from(e, n_planes=n_planes, bucket_cap=None)
-    )
-    uncapped = banded(uncapped_df)
-    planted_uncapped = planted_found(uncapped_df)
-    release_caches()
-    bands = sorted(set(capped) | set(uncapped))
-    total_c, total_u = sum(capped.values()), sum(uncapped.values())
-    print(
-        json.dumps(
-            {
-                "metric": "near_dup_cap_haircut_sf1",
-                "unit": "dropped_pair_fraction",
-                "value": round(1 - total_c / max(total_u, 1), 6),
-                "n_planes": n_planes,
-                "pairs_capped": total_c,
-                "pairs_uncapped": total_u,
-                "planted_pairs": {
-                    "n_planted": n_planted,
-                    "target_cos_band": "0.85-0.95",
-                    "found_uncapped": planted_uncapped,
-                    "found_capped": planted_capped,
-                    "survival_fraction": round(
-                        planted_capped / max(planted_uncapped, 1), 6
-                    ),
-                },
-                "per_band": {
-                    b: {
-                        "capped": capped.get(b, 0),
-                        "uncapped": uncapped.get(b, 0),
-                        "dropped_fraction": round(
-                            1 - capped.get(b, 0) / max(uncapped.get(b, 0), 1), 6
-                        ),
-                    }
-                    for b in bands
-                },
-            }
-        )
-    )
-
-
-# -------------------------------------------------- protocol variance
-def _protocol_main() -> None:
-    """`bench.py --protocol` (round-8 verdict item 7): the pinned
-    protocol-throughput recipe. Same-session runs spanned 2×
-    (44.9k–85.1k msgs/s in BENCH_LOCAL_r08) because the 0.5-0.7 s
-    pipeline is small against scheduler/GC noise on a shared 32-core
-    VM. Recipe (also in SCALING.md): idle box, ONE Spark session,
-    warm-up job, then N ≥ 5 independent measurements of the same
-    decode+correlate pipeline (each itself best-of-3 noop writes);
-    report best with ALL runs recorded. Best-of is the right
-    estimator for a fixed workload: contention only ever adds time."""
-    n = int(os.environ.get("SPARK_GRAFT_PROTOCOL_RUNS", "5"))
-    spark = get_spark("ingestor-etl-spark-protocol")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    runs = []
-    for _ in range(n):
-        runs.append(bench_protocol_throughput(spark))
-        release_caches()
-    best = max(runs, key=lambda p: p["msgs_per_sec"])
-    print(
-        json.dumps(
-            {
-                "metric": "protocol_throughput_recipe",
-                "unit": "msgs_per_sec",
-                "value": best["msgs_per_sec"],
-                "n_runs": n,
-                "best": best,
-                "runs_msgs_per_sec": [r["msgs_per_sec"] for r in runs],
-                "runs_sec": [r["sec"] for r in runs],
-            }
-        )
-    )
-
-
 # ----------------------------------------------------------- skew stress
 def _skew_main() -> None:
     """`bench.py --skew`: stress the blowup guards on generated
     hot-key data at meaningful volume (not the toy unit fixtures) —
     one hot key carrying ~30-50% of the mass, exactly the shape that
-    kills unguarded plans at 100 TB. Times the four guard surfaces
-    the round-4 verdict asked for (pagerank candidate cut, the
-    stop-shingle truth leg, LSH hot-bucket pair emission, salted agg
-    + salted skew join) plus entity_resolution's hot-block fallback
-    on a 90%-corporate-suffix catalog. Prints ONE JSON line; the
-    committed copy lives in SKEWBENCH.json with the analysis in
+    kills unguarded plans at 100 TB. Times the guard surfaces
+    (pagerank candidate cut, the stop-shingle truth leg, LSH
+    hot-bucket pair emission, salted agg + salted skew join,
+    entity_resolution's hot-block fallback on a 90%-corporate-suffix
+    catalog, identical-signature and identical-vector clusters, the
+    hot-shingle jaccard route, hot IVF lists). Prints ONE JSON line;
+    the committed copy lives in SKEWBENCH.json with the analysis in
     SCALING.md."""
     from pyspark.sql import functions as F
 
@@ -1279,14 +834,12 @@ def _skew_main() -> None:
         _near_dup_from,
     )
 
-    spark = get_spark("ingestor-etl-spark-skewbench")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = _session("ingestor-etl-spark-skewbench")
 
     results: dict[str, dict] = {}
 
     def run(name: str, df, meta: dict) -> None:
-        t = _time_query(df, 2)
+        t, _ = _time_query_cold(lambda: df, 2)
         results[name] = {"sec": t, **meta}
         release_caches()
 
@@ -1415,7 +968,7 @@ def _skew_main() -> None:
         {"names": n_names, "suffix_mass": 0.9},
     )
 
-    # 7. identical-signature mega-cluster (round-5 verdict weak flag):
+    # 7. identical-signature mega-cluster:
     # 100k docs share ONE full minhash signature (an exact-duplicate
     # boilerplate cluster in raw crawl data) next to 100k distinct
     # docs. Uncollapsed, the band bucket self-join emits 3 bands ×
@@ -1444,7 +997,7 @@ def _skew_main() -> None:
         },
     )
 
-    # 8. identical-embedding mega-cluster (same flag, vector side):
+    # 8. identical-embedding mega-cluster (the vector side of 7):
     # 100k bit-identical vectors + 2k distinct ones. Uncollapsed,
     # every one of the N_TABLES=10 bucket joins emits C(100k,2) rows;
     # collapsed (_vec_clusters) the cluster is one row per table.
@@ -1466,8 +1019,8 @@ def _skew_main() -> None:
         },
     )
     # knn_graph measured through its REGISTERED exact semantics
-    # (auto_scale census, as the registered query runs since round
-    # 9): the top-(K+1) member prune keeps expansion linear (m×K
+    # (auto_scale census, as the registered query runs): the
+    # top-(K+1) member prune keeps expansion linear (m×K
     # edges for the dup cluster), so the full kNN output itself is
     # bounded. ~2k distinct vectors → the census keeps KNN_PLANES.
     run(
@@ -1476,7 +1029,7 @@ def _skew_main() -> None:
         {"vecs": 102_000, "dup_cluster_vecs": 100_000, "output": "≈102k×K edges"},
     )
 
-    # 9. hot-shingle exact-Jaccard pairs (round-7 verdict item 1):
+    # 9. hot-shingle exact-Jaccard pairs:
     # 200k docs × 10 shingles, ONE boilerplate shingle on 30% of the
     # corpus — the uncut shared-shingle self-join would emit
     # C(60k,2) ≈ 1.8e9 rows from that shingle alone, so the df
@@ -1505,7 +1058,7 @@ def _skew_main() -> None:
         },
     )
 
-    # 10. hot inverted list for the IVF+PQ stacks (round 10): 100k
+    # 10. hot inverted list for the IVF+PQ stacks: 100k
     # vectors, 90% jittered around ONE direction — the shape a
     # deduplicated-but-not-exact crawl corpus produces, where a
     # single coarse cell can end up holding most of the corpus and
@@ -1514,13 +1067,12 @@ def _skew_main() -> None:
     # included) on a temp parquet corpus with the standard layout.
     # Coarse training does NOT rescue this shape (measured trained
     # list sizes: 90000 / 9999 / 1 — the cluster is tighter than the
-    # centroid resolution); since round 11 the census-gated hot-cell
-    # SUB-SPLIT does (_ivf_candidate_cells: load factor 7.2 > 4.0
-    # engages per-cell local centroids, queries probe
-    # IVF_SUB_NPROBE/IVF_SUB_K of the hot cell), so these rows now
-    # pin the mitigation: ann_ivf_pq 10.2 s (r10, uncapped,
-    # nprobe=2) → 3.0 s (capped, nprobe=4), within ~20% of the
-    # uniform-corpus cost, with similarity quality preserved
+    # centroid resolution); the census-gated hot-cell SUB-SPLIT does
+    # (_ivf_candidate_cells: load factor 7.2 > 4.0 engages per-cell
+    # local centroids, queries probe IVF_SUB_NPROBE/IVF_SUB_K of the
+    # hot cell), so these rows pin the mitigation: ann_ivf_pq 10.2 s
+    # (uncapped, nprobe=2) → 3.0 s (capped, nprobe=4), within ~20% of
+    # the uniform-corpus cost, with similarity quality preserved
     # (tests/test_wave27).
     import shutil as _sh
     import tempfile as _tf
@@ -1534,10 +1086,9 @@ def _skew_main() -> None:
             " ELSE cast(pmod(hash(id, d), 2000) - 1000 AS double) / 1000.0D"
             " END) AS embedding",
         ).write.mode("overwrite").parquet(f"{ivf_dir}/embeddings.parquet")
-        # round 14 (round-12 verdict item 7, carried through r13 item
-        # 9): ann_ivf_hamming joins the hot-list rows — it shares the
-        # coarse machinery (census-gated sub-split) but scores via the
-        # Hamming sketch, so its hot-cell behavior needs its own pin.
+        # ann_ivf_hamming shares the coarse machinery (census-gated
+        # sub-split) but scores via the Hamming sketch, so its
+        # hot-cell behavior needs its own pin.
         for q in ("ann_ivf_pq", "ann_ivf_pq_residual", "ann_ivf_hamming"):
             run(
                 f"{q}_hot_list",
@@ -1563,93 +1114,29 @@ def _skew_main() -> None:
     )
 
 
-# ------------------------------------------------ skew scale ladder
-def _skew_scale_main() -> None:
-    """`bench.py --skew-scale` (round-11 verdict item 6): the
-    hot-inverted-list corpus (the --skew generator: 90% of vectors
-    jittered around ONE direction) at TWO scales, timing the
-    REGISTERED ann_ivf_pq end-to-end, so the census-gated sub-split's
-    ENGAGED path gets a growth exponent instead of a single point.
-    The quadratic fear is every query ADC-scanning the hot cell
-    (O(corpus) candidates/query → superlinear wall time as both the
-    corpus and the cell grow); the sub-split bounds probed mass at
-    ~load·SUB_NPROBE/SUB_K of the hot cell, so measured time should
-    grow ~linearly (exponent ≈ 1) — training and encode passes are
-    one scan each. Since round 12 the geometry census also engages
-    at these corpora (nlist ∝ √N, 256 PQ codes), so this doubles as
-    the first timed run of the SCALED literal-codebook path."""
-    import math
-    import shutil as _sh
-    import tempfile as _tf
+_USAGE = """usage: python bench.py [--sf1 | --skew | --jdecomp [--sf3]]
+  (no flag)        headline + extended query sets, protocol throughput
+  --sf1            sf0.1 -> sf1 scaling exponents
+  --skew           hot-key blowup-guard stress
+  --jdecomp        jaccard-family scale decomposition (sf0.1/0.3/1)
+  --jdecomp --sf3  ... with the sf3 rung added
+ingest and streaming benchmarks: perfbench/README.md"""
 
-    registry = load_all()
-    spark = get_spark("ingestor-etl-spark-skewscale")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    out: dict[str, dict] = {}
-    for n in (100_000, 200_000):
-        d = _tf.mkdtemp(prefix="skewscale_")
-        try:
-            spark.range(n).selectExpr(
-                "id AS vec_id",
-                "transform(sequence(0, 63), dd -> CASE WHEN id % 10 < 9"
-                " THEN 1.0D + cast(pmod(hash(id, dd), 1000) AS double)"
-                "      / 1000000.0D"
-                " ELSE cast(pmod(hash(id, dd), 2000) - 1000 AS double)"
-                "      / 1000.0D END) AS embedding",
-            ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-            # warm-up execution first (Arrow/UDF worker spin-up and
-            # codegen otherwise land entirely on the first scale
-            # point and fake a negative exponent), then best-of-2
-            best = float("inf")
-            for i in range(3):
-                start = time.perf_counter()
-                registry["ann_ivf_pq"].fn(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sec = round(time.perf_counter() - start, 3)
-                release_caches()
-                if i > 0:
-                    best = min(best, sec)
-            out[str(n)] = {"vecs": n, "sec": best}
-        finally:
-            _sh.rmtree(d, ignore_errors=True)
-    expo = round(
-        math.log(out["200000"]["sec"] / out["100000"]["sec"]) / math.log(2), 3
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "ivf_hot_list_scale",
-                "unit": "sec",
-                "value": out["200000"]["sec"],
-                "scales": out,
-                "time_exponent_100k_200k": expo,
-                "note": "hot-cluster corpus (90% one direction);"
-                " registered ann_ivf_pq end-to-end incl. training;"
-                " sub-split + scaled geometry engaged at both scales",
-            }
-        )
-    )
+_MODES = {
+    (): main,
+    ("--sf1",): _sf1_main,
+    ("--skew",): _skew_main,
+    ("--jdecomp",): _jdecomp_main,
+    ("--jdecomp", "--sf3"): lambda: _jdecomp_main(include_sf3=True),
+}
 
 
 if __name__ == "__main__":
-    if "--skew-scale" in sys.argv:
-        _skew_scale_main()
-    elif "--skew" in sys.argv:
-        _skew_main()
-    elif "--sf1" in sys.argv:
-        _sf1_main()
-    elif "--jdecomp-cluster" in sys.argv:
-        _jdecomp_cluster_main()
-    elif "--headline-cluster" in sys.argv:
-        _headline_cluster_main()
-    elif "--jdecomp" in sys.argv:
-        _jdecomp_main(include_sf3="--sf3" in sys.argv)
-    elif "--haircut" in sys.argv:
-        _haircut_main()
-    elif "--protocol" in sys.argv:
-        _protocol_main()
-    else:
-        main()
+    # An unrecognised flag must not fall through to a multi-minute
+    # bench that measures something else: refuse before any session
+    # starts.
+    mode = _MODES.get(tuple(sys.argv[1:]))
+    if mode is None:
+        print(_USAGE, file=sys.stderr)
+        sys.exit(2)
+    mode()
