@@ -8,10 +8,10 @@ with bidirectional msisdn/imsi enrichment, diameter.py:302-339).
 Spark shape:
 
     segments (net.expand_l4, port-3868 filter is native)
-      → groupBy(stream key) + applyInPandas stitcher   [R1/R2]
-          one shuffle, partitioned exactly like the reference's
-          reassembly dicts were keyed — but spillable and parallel
-          across keys/files
+      → groupBy(file) + applyInPandas stitcher         [R1/R2]
+          one shuffle; inside each file's group ``stitch`` runs
+          once per stream key, the reference's reassembly dict keys
+          (streaming keeps state per stream key instead)
       → native filter command_code != 280               [DWR drop]
       → self-join requests ↔ answers on the txn key     [J1]
 
@@ -176,16 +176,29 @@ def stitch(
     return messages, pending, frames
 
 
-def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch R1/R2: one stream's segments from an empty state."""
-    pdf = pdf.sort_values("frame_no")
-    file, src, dst = pdf["file"].iloc[0], pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0]
-    messages, _, _ = stitch(zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]))
-    rows = [(file, fl, ts_us, src, dst) + fields for fl, ts_us, fields in messages]
-    return pd.DataFrame(rows, columns=_COLS)
-
-
 STREAM_KEY = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
+
+
+def _stitch_file(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batch R1/R2: one capture file's segments, each ``STREAM_KEY``
+    stream stitched from an empty state in frame order."""
+    pdf = pdf.sort_values("frame_no", kind="stable")
+    # TCP rows have no SCTP sid/ssn; as -1 their keys compare equal (NaN != NaN)
+    keys = zip(*(
+        (pdf[c].astype("float64").fillna(-1) if c.startswith("sctp_") else pdf[c]).tolist()
+        for c in STREAM_KEY[1:]
+    ))
+    segs = zip(pdf["frame_no"].tolist(), pdf["ts_us"].tolist(), pdf["payload"].tolist())
+    streams: dict[tuple, list[tuple]] = {}
+    for key, seg in zip(keys, segs):
+        streams.setdefault(key, []).append(seg)
+    file = pdf["file"].iloc[0]
+    rows = [
+        (file, fl, ts_us, src, dst) + fields
+        for (src, dst, *_), stream in streams.items()
+        for fl, ts_us, fields in stitch(stream)[0]
+    ]
+    return pd.DataFrame(rows, columns=_COLS)
 
 
 def diameter_flows(segments: DataFrame) -> DataFrame:
@@ -204,11 +217,10 @@ def decode_diameter(segments: DataFrame) -> DataFrame:
     The stream key mirrors the reference's reassembly dict keys:
     SCTP (sid, ssn, src, dst) — diameter.py:52-71 — and the TCP
     flow 4-tuple — diameter.py:74-96 — refined by file so captures
-    never cross-talk. Device-Watchdog (cmd 280) is dropped natively
-    after decode (diameter.py:128-130)."""
-    msgs = diameter_flows(segments).groupBy(*STREAM_KEY).applyInPandas(
-        _stitch_group, MESSAGE_SCHEMA
-    )
+    never cross-talk. One Python group per capture file walks all of
+    its streams, as the reference walks one capture. Device-Watchdog
+    (cmd 280) is dropped natively after decode (diameter.py:128-130)."""
+    msgs = diameter_flows(segments).groupBy("file").applyInPandas(_stitch_file, MESSAGE_SCHEMA)
     return (
         msgs.where(F.col("command_code") != CMD_DEVICE_WATCHDOG)
         .withColumn("ts", F.timestamp_micros("ts_us"))

@@ -13,11 +13,15 @@ redesigned below).
 
 Pairing model (R6): a request keys itself by (flow, its ACK); the
 matching response keys by (reversed flow, its SEQ) — TCP guarantees
-these coincide, so in Spark the "dict" is simply an equi-join key
+these coincide, so both sides of an exchange share one pairing key
 ``pair_id``. Continuation segments carry no start line; they claim
-a side by joining their candidate request key first, then their
-candidate response key (same precedence as the reference's two dict
-probes). Because this is a join, not sequential state, the
+the request key they would carry first, then the response key (same
+precedence as the reference's two dict probes). Start lines are
+classified by native Spark columns; the keying and the body
+concatenation are one plain-Python walk per capture file
+(``pair_segments``, under ``groupBy(file).applyInPandas``), the
+reference's one sequential pass over a capture. The walk collects
+every start key of the file before any continuation probes, so the
 reference's out-of-order "lookahead" patch-up
 (http_ss7_ingestor.py:186-191) is unnecessary — arrival order
 cannot matter in batch.
@@ -37,13 +41,14 @@ UDF-style mapInPandas extractors — one per dialect.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     IntegerType,
     LongType,
@@ -71,90 +76,91 @@ OCS_OPERATION_TYPES = {
 }
 
 
+# one TCP data segment, as ``pair_segments`` reads it
+SEGMENT_COLS = [
+    "frame_no", "ts_us", "src_ip", "src_port", "dst_ip", "dst_port",
+    "tcp_seq", "tcp_ack", "side", "payload",
+]
+
+PAIRED_SCHEMA = StructType(
+    [
+        StructField("file", StringType()),
+        StructField("a_ip", StringType()),
+        StructField("a_port", IntegerType()),
+        StructField("b_ip", StringType()),
+        StructField("b_port", IntegerType()),
+        StructField("pair_id", LongType()),
+        StructField("side", StringType()),
+        StructField("frames_list", ArrayType(LongType())),
+        StructField("ts_us", LongType()),
+        StructField("tcp_sequence", LongType()),
+        StructField("tcp_acknowledge", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def pair_segments(rows: Iterable[tuple]) -> list[tuple]:
+    """R5/R6 over one capture file's TCP data segments, each a
+    ``SEGMENT_COLS`` tuple with ``side`` 'req', 'res' or None
+    (continuation) → one ``PAIRED_SCHEMA`` tuple (less ``file``) per
+    (pairing key, side).
+
+    A retransmission (same 4-tuple, seq and ack) keeps its lowest
+    frame (http_ingestor.py:412-414). A request start keys by (flow,
+    ack), a response start by (reversed flow, seq). A continuation
+    claims the request key it would carry, else the response key,
+    else nothing (http_ocs_ingestor.py:226-248). Each group's parts
+    concatenate in frame order; ts/seq/ack come from its first."""
+    first: dict[tuple, tuple] = {}
+    for seg in sorted(rows, key=lambda seg: seg[0]):
+        first.setdefault(seg[2:8], seg)
+    req_keys = {(s[2], s[3], s[4], s[5], s[7]) for s in first.values() if s[8] == "req"}
+    res_keys = {(s[4], s[5], s[2], s[3], s[6]) for s in first.values() if s[8] == "res"}
+    groups: dict[tuple, list[tuple]] = {}
+    for frame_no, ts_us, src, sport, dst, dport, seq, ack, side, payload in first.values():
+        as_req, as_res = (src, sport, dst, dport, ack), (dst, dport, src, sport, seq)
+        if side == "req" or (side is None and as_req in req_keys):
+            key = as_req + ("req",)
+        elif side == "res" or (side is None and as_res in res_keys):
+            key = as_res + ("res",)
+        else:
+            continue
+        groups.setdefault(key, []).append((frame_no, ts_us, seq, ack, payload))
+    return [
+        key + ([p[0] for p in parts], *parts[0][1:4], b"".join(p[4] for p in parts))
+        for key, parts in groups.items()
+    ]
+
+
+def _pair_file(pdf: pd.DataFrame) -> pd.DataFrame:
+    rows = pair_segments(zip(*(pdf[c].tolist() for c in SEGMENT_COLS)))
+    file = pdf["file"].iloc[0]
+    return pd.DataFrame([(file,) + r for r in rows], columns=PAIRED_SCHEMA.fieldNames())
+
+
 def http_messages(segments: DataFrame) -> DataFrame:
     """R5/R6 + P28/P29: TCP segments → one row per HTTP message with
-    reassembled body, pairing key, and projected headers."""
-    tcp = segments.where(
-        (F.col("ip_proto") == 6)
-        & F.col("tcp_flags").isin(16, 24)
-        & (F.length("payload") > 0)
-    )
+    reassembled body, pairing key, and projected headers.
+
+    One Python group holds one capture file's TCP data segments; the
+    ``binaryFile`` source already holds the whole file in one row."""
     first_line = F.split(F.col("payload").cast("string"), "\r\n").getItem(0)
-    classified = tcp.withColumn(
-        "side",
-        F.when(first_line.rlike(_RES_RE), "res")
-        .when(first_line.rlike(_REQ_RE), "req")
-        .otherwise(None),
-    )
-    # retransmission drop: same flow + seq + ack (+side) appears once
-    # (http_ingestor.py:412-414)
-    classified = classified.dropDuplicates(
-        ["file", "src_ip", "src_port", "dst_ip", "dst_port", "tcp_seq", "tcp_ack"]
-    )
-    # classified feeds FOUR branches (req/res starts, continuation
-    # probes, start-key set) — materialize so the pcap decode runs
-    # once, not once per branch.
-    from ingestor_etl_spark.plans.layout import materialize
-
-    classified = materialize(classified)
-
-    def oriented(side_req: bool):
-        """Request direction defines (a → b); responses reverse."""
-        if side_req:
-            return [F.col("src_ip"), F.col("src_port"), F.col("dst_ip"), F.col("dst_port")]
-        return [F.col("dst_ip"), F.col("dst_port"), F.col("src_ip"), F.col("src_port")]
-
-    def keyed(df: DataFrame, as_req: bool) -> DataFrame:
-        a_ip, a_port, b_ip, b_port = oriented(as_req)
-        pid = F.col("tcp_ack") if as_req else F.col("tcp_seq")
-        return (
-            df.withColumn("a_ip", a_ip)
-            .withColumn("a_port", a_port)
-            .withColumn("b_ip", b_ip)
-            .withColumn("b_port", b_port)
-            .withColumn("pair_id", pid)
+    tcp = (
+        segments.where(
+            (F.col("ip_proto") == 6)
+            & F.col("tcp_flags").isin(16, 24)
+            & (F.length("payload") > 0)
         )
-
-    req_starts = keyed(classified.where(F.col("side") == "req"), True)
-    res_starts = keyed(classified.where(F.col("side") == "res"), False)
-    starts = req_starts.unionByName(res_starts)
-
-    conts = classified.where(F.col("side").isNull())
-    key_cols = ["file", "a_ip", "a_port", "b_ip", "b_port", "pair_id"]
-    start_keys = starts.select(*key_cols, "side").dropDuplicates(key_cols)
-    # continuation probes its request key first, response key second
-    # — same precedence as http_ocs_ingestor.py:226-248.
-    cand_req = keyed(conts, True)
-    matched_req = cand_req.join(
-        start_keys.where("side = 'req'").drop("side"), key_cols, "left_semi"
-    ).withColumn("side", F.lit("req"))
-    cand_res = keyed(
-        cand_req.join(start_keys.where("side = 'req'").drop("side"), key_cols, "left_anti")
-        .drop("a_ip", "a_port", "b_ip", "b_port", "pair_id"),
-        False,
-    )
-    matched_res = cand_res.join(
-        start_keys.where("side = 'res'").drop("side"), key_cols, "left_semi"
-    ).withColumn("side", F.lit("res"))
-    members = starts.unionByName(matched_req).unionByName(matched_res)
-
-    grouped = (
-        members.groupBy(*key_cols, "side")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("frame_no", "payload", "tcp_seq", "tcp_ack", "ts_us"))
-            ).alias("parts"),
-        )
-        .withColumn("frames_list", F.transform("parts", lambda x: x["frame_no"]))
-        .withColumn("ts_us", F.col("parts").getItem(0)["ts_us"])
-        .withColumn("tcp_sequence", F.col("parts").getItem(0)["tcp_seq"])
-        .withColumn("tcp_acknowledge", F.col("parts").getItem(0)["tcp_ack"])
         .withColumn(
-            "payload",
-            F.aggregate("parts", F.lit(b""), lambda acc, x: F.concat(acc, x["payload"])),
+            "side",
+            F.when(first_line.rlike(_RES_RE), "res")
+            .when(first_line.rlike(_REQ_RE), "req")
+            .otherwise(None),
         )
-        .drop("parts")
+        .select("file", *SEGMENT_COLS)
     )
+    grouped = tcp.groupBy("file").applyInPandas(_pair_file, PAIRED_SCHEMA)
 
     text = F.col("payload").cast("string")
     start_line = F.split(text, "\r\n").getItem(0)
@@ -514,14 +520,11 @@ def link_http(messages: DataFrame, enrich_cols: list[str] = ()) -> DataFrame:
     ``http_response_in``, and coalesce ``enrich_cols`` across the
     pair in both directions (http_ocs_ingestor.py:503-595).
 
-    Plan shape (round-5 verdict item 6): formerly a req/res split +
-    two left joins, which replicated the whole decode subtree four
-    times and shuffled each leg separately (~20 exchanges on the OCS
-    pipeline). A request and its response share the conversation key,
-    so pair linking is WINDOW algebra over that key: ONE exchange of
-    the message table, no joins, no re-decode. max() over the ≤1
-    opposite-side row per pair is also deterministic where the old
-    dropDuplicates pick was not."""
+    Plan shape: a request and its response share the conversation
+    key, so pair linking is WINDOW algebra over that key: ONE
+    exchange of the message table, no joins, no re-decode of the
+    subtree. max() over the ≤1 opposite-side row per pair is
+    deterministic."""
     from pyspark.sql import Window
 
     with_id = messages.withColumn("http_id", F.col("frames_list").getItem(0))

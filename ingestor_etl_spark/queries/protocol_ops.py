@@ -479,9 +479,9 @@ def pcap_http_ocs_linked(spark, sf_dir):
     redesign) and bidirectional enrichment."""
     from ingestor_etl_spark.plans.layout import materialize
 
-    # Round 13 (guide §2.1): link_http's req/res split + enrichment
-    # consume the decoded relation from three subtrees — unpersisted,
-    # the Arrow decode chain executed 3× per run (PLANS x-py was 3).
+    # link_http's request/response columns and enrichment read the
+    # decoded relation from several subtrees; persisted, the Arrow
+    # decode chain runs once per execution.
     msgs = materialize(
         extract_ocs(
             http_messages(expand_l4(read_pcap(spark, _http_ocs_capture())))

@@ -267,3 +267,63 @@ def test_cli_ledger_analysis_error_writes_no_table(spark, tmp_path, monkeypatch)
             "--ledger", str(tmp_path / "ledger"),
         ])
     assert not out.exists()
+
+
+def _http_ocs_drop(directory) -> str:
+    """Two HTTP-OCS captures, each a split request and its response;
+    returns their glob."""
+    from tests.test_http_sig import OCS_XML, _flow, _http
+
+    directory.mkdir()
+    req = _http("POST /ocs HTTP/1.1", OCS_XML)
+    res = _http("HTTP/1.1 200 OK", b'<mo-acr-response id="7"><result>0</result></mo-acr-response>')
+    cut = len(req) // 2
+    for name in ("a.pcap", "b.pcap"):
+        (directory / name).write_bytes(g.pcap([
+            _flow(req[:cut], (2200, 0), seq=1000, ack=555),
+            _flow(req[cut:], (2200, 1), seq=1000 + cut, ack=555),
+            _flow(res, (2200, 2), seq=555, ack=1000 + len(req), reverse=True),
+        ]))
+    return str(directory / "*.pcap")
+
+
+def test_http_ocs_decode_stage_plan(spark, tmp_path):
+    """The HTTP decode stage is one per-file reassembly shuffle: no
+    broadcast join and no cache inside the persisted stage itself."""
+    from ingestor_etl_spark.__main__ import build_pipeline
+    from ingestor_etl_spark.plans.audit import executed_facts
+    from ingestor_etl_spark.plans.layout import release_caches
+
+    try:
+        _, decoded = build_pipeline(spark, "http_ocs", _http_ocs_drop(tmp_path / "caps"))
+        facts = executed_facts(decoded)
+        assert decoded.count() == 4
+    finally:
+        release_caches()
+    assert facts["exec_broadcasts"] == 0, facts
+    assert facts["exec_cache_scans"] == 1, facts  # the decode stage's own cache
+    assert facts["exec_exchanges"] == 1, facts
+
+
+def test_cli_glob_input_logs_no_missing_file_warning(spark, tmp_path):
+    """A ``<dir>/*.pcap`` ingest reads the directory with a file-name
+    filter, so Spark logs no FileNotFoundException for the literal
+    glob, and the ledger names the same files the glob read names."""
+    import subprocess
+    import sys
+
+    glob_ = _http_ocs_drop(tmp_path / "caps")
+    out, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-m", "ingestor_etl_spark", "--protocol", "http_ocs",
+         "--input", glob_, "--out", out, "--ledger", ledger],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "FileNotFoundException" not in proc.stderr, proc.stderr[-3000:]
+    names = {r.filename for r in current_ledger_state(spark, ledger).collect()}
+    globbed = {r.path for r in spark.read.format("binaryFile").load(glob_).select("path").collect()}
+    assert names == globbed and len(names) == 2
+    assert spark.read.parquet(out).count() == 4

@@ -125,6 +125,40 @@ def test_stitch_resumes_from_pending_state(cut):
     assert (first + second, pending, pending_frames) == whole
 
 
+def test_stitch_file_matches_per_stream_stitch():
+    """Batch decode walks a whole capture file in one group: streams
+    interleaved in one file give the messages ``stitch`` gives each
+    stream on its own."""
+    import pandas as pd
+
+    from ingestor_etl_spark.protocols.diameter import STREAM_KEY, _stitch_file
+
+    (segs, _), (other, _) = _stitch_segments(), _stitch_segments()
+    ccr = _ccr(msisdn="5215550009")
+    streams = {  # stream key (less file) → frame-ordered segments
+        ("10.0.0.1", "10.0.0.2", 40001, 3868, 1, 0): segs,
+        ("10.0.0.1", "10.0.0.2", 40001, 3868, 2, 0): other,
+        ("10.0.0.3", "10.0.0.2", 50000, 3868, None, None): [(0, 0, ccr[:40]), (0, 0, ccr[40:])],
+    }
+    rows, frame_no = [], 0
+    for i in range(5):  # renumbered round-robin: each stream's i-th segment in turn
+        for key, stream in streams.items():
+            if i < len(stream):
+                frame_no += 1
+                stream[i] = (frame_no, 1000 + frame_no, stream[i][2])
+                rows.append(("f", *key, *stream[i]))
+    pdf = pd.DataFrame(rows[::-1], columns=STREAM_KEY + ["frame_no", "ts_us", "payload"])
+    got = _stitch_file(pdf)
+    want = [
+        ("f", fl, ts_us, key[0], key[1]) + fields
+        for key, stream in streams.items()
+        for fl, ts_us, fields in stitch(stream)[0]
+    ]
+    assert len(want) == 9
+    norm = lambda r: tuple(None if v != v else v for v in r)  # noqa: E731 NaN → None
+    assert sorted(map(norm, got.itertuples(index=False)), key=repr) == sorted(map(norm, want), key=repr)
+
+
 @pytest.fixture(scope="module")
 def diameter_capture(tmp_path_factory):
     """CCR/CCA over SCTP, a DWR (dropped), an unmatched request, and
@@ -158,8 +192,10 @@ def test_decode_diameter_end_to_end(spark, diameter_capture):
     split_row = out[out.hop_by_hop_id == 0xCAFE].iloc[0]
     assert list(split_row.frames_list) == [5, 6]  # R2 reassembly
     assert split_row.msisdn == "5215550002"
-    ccr_row = out[out.hop_by_hop_id == 0xAAAA0001].iloc[0]
-    assert ccr_row.request and ccr_row.msisdn == "5215550001"
+    # the CCR and its CCA share the hop-by-hop id: exactly one of each
+    pair = out[out.hop_by_hop_id == 0xAAAA0001]
+    assert sorted(pair.request) == [False, True]
+    assert pair[pair.request].iloc[0].msisdn == "5215550001"
 
 
 def test_correlate_diameter_j1(spark, diameter_capture):

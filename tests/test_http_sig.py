@@ -8,6 +8,7 @@ from ingestor_etl_spark.protocols.http_sig import (
     extract_ocs,
     extract_ss7sms,
     link_http,
+    pair_segments,
     parse_generic_body,
     parse_ocs_body,
     parse_ss7sms_body,
@@ -153,3 +154,70 @@ def test_http_nocontent_and_dialects(spark, tmp_path):
     assert nocontent.http_request_method == "GET"
     smsrow = out[out.type == "smsmt"].iloc[0]
     assert smsrow.imsi == "33401" and smsrow.msc == "mscB" and smsrow.udhi == False  # noqa: E712
+
+
+CLIENT, SERVER = ("10.1.1.1", 45000), ("10.1.1.2", 8080)
+
+
+def _seg(frame_no, side, seq, ack, payload, reverse=False):
+    """One ``SEGMENT_COLS`` tuple, client → server unless ``reverse``."""
+    (src, sport), (dst, dport) = (SERVER, CLIENT) if reverse else (CLIENT, SERVER)
+    return (frame_no, 1000 + frame_no, src, sport, dst, dport, seq, ack, side, payload)
+
+
+def _groups(rows):
+    """pair_segments output keyed by (side, pair_id) → (frames, payload)."""
+    return {(r[5], r[4]): (r[6], r[10]) for r in pair_segments(rows)}
+
+
+def test_pair_segments_continuation_claimed_by_ack():
+    rows = pair_segments([_seg(1, "req", 1000, 555, b"POST /a"), _seg(2, None, 1007, 555, b"BODY")])
+    assert rows == [(*CLIENT, *SERVER, 555, "req", [1, 2], 1001, 1000, 555, b"POST /aBODY")]
+
+
+def test_pair_segments_retransmission_keeps_first_frame():
+    # the retransmitted continuation (frame 3) arrives first
+    rows = [_seg(3, None, 1007, 555, b"BODY"), _seg(1, "req", 1000, 555, b"POST /a"),
+            _seg(2, None, 1007, 555, b"BODY")]
+    assert _groups(rows) == {("req", 555): ([1, 2], b"POST /aBODY")}
+
+
+def test_pair_segments_pipelined_requests_sharing_ack_merge():
+    rows = [_seg(1, "req", 1000, 555, b"GET /a"), _seg(2, "req", 1006, 555, b"GET /b")]
+    assert _groups(rows) == {("req", 555): ([1, 2], b"GET /aGET /b")}
+
+
+def test_pair_segments_drops_unclaimed_continuation():
+    rows = [_seg(1, "req", 1000, 555, b"POST /a"), _seg(2, None, 1007, 556, b"stray")]
+    assert _groups(rows) == {("req", 555): ([1], b"POST /a")}
+    assert pair_segments([_seg(1, None, 1, 2, b"orphan")]) == []
+
+
+def test_pair_segments_request_key_wins_over_response_key():
+    """A continuation whose request key and response key both match a
+    start joins the request, the reference's first dict probe."""
+    rows = [
+        _seg(1, "req", 1000, 555, b"POST /a"),
+        _seg(2, "res", 777, 9, b"HTTP/1.1 200 OK"),  # also client → server
+        _seg(3, None, 777, 555, b"BODY"),
+    ]
+    assert _groups(rows) == {
+        ("req", 555): ([1, 3], b"POST /aBODY"),
+        ("res", 777): ([2], b"HTTP/1.1 200 OK"),
+    }
+
+
+def test_pair_segments_request_continuation_beside_its_response():
+    """The normal exchange: the response's start key (reversed flow,
+    its seq) equals the request's (flow, its ack), and the request's
+    continuation still joins the request, whatever the row order."""
+    req, res = b"POST /a", b"HTTP/1.1 200 OK"
+    rows = [
+        _seg(1, "req", 1000, 555, req),
+        _seg(2, None, 1000 + len(req), 555, b"BODY"),
+        _seg(3, "res", 555, 1011, res, reverse=True),
+    ]
+    for order in (rows, rows[::-1]):
+        out = pair_segments(order)
+        assert [r[:5] for r in out] == [(*CLIENT, *SERVER, 555)] * 2
+        assert _groups(order) == {("req", 555): ([1, 2], req + b"BODY"), ("res", 555): ([3], res)}

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
+from pyspark.errors import AnalysisException
 
 from ingestor_etl_spark.protocols.net import expand_l4
 from ingestor_etl_spark.sources.pcap import (
@@ -61,6 +63,34 @@ def test_read_pcap_bad_magic_error_row(spark, tmp_path):
     rows = read_pcap(spark, str(p)).collect()
     assert len(rows) == 1
     assert rows[0].error is not None and "magic" in rows[0].error
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        ("a.pcap", "b.txt", ".c.pcap", "_d.pcap"),
+        ("a.pcap", "sub/c.pcap"),
+        ("a.pcap", "k=1/d.pcap"),
+        ("a.pcap", "sub/c.pcap", "k=1/d.pcap"),
+    ],
+)
+def test_read_pcap_glob_reads_only_matching_files(spark, tmp_path, layout):
+    """``<dir>/*.pcap`` reads the matching files directly in ``<dir>``:
+    not other or hidden names, not subdirectories, and not the
+    ``key=value`` partition directories a read of ``<dir>`` would pick
+    (nor fail on)."""
+    cap = g.pcap([(1700000000, 5, UDP_PKT)])
+    for rel in layout:
+        (tmp_path / rel).parent.mkdir(exist_ok=True)
+        (tmp_path / rel).write_bytes(cap)
+    rows = read_pcap(spark, str(tmp_path / "*.pcap")).collect()
+    assert [r.file.rsplit("/", 1)[-1] for r in rows] == ["a.pcap"]
+
+
+def test_read_pcap_glob_matching_nothing_fails(spark, tmp_path):
+    (tmp_path / "a.txt").write_bytes(b"x")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_pcap(spark, str(tmp_path / "*.pcap"))
 
 
 def test_expand_l4_tcp_udp_sctp(spark, tmp_path):

@@ -179,7 +179,7 @@ def test_reassembly_order_invariance(order):
     messages (SURVEY §7.4 order-sensitivity requirement)."""
     import pandas as pd
 
-    from ingestor_etl_spark.protocols.diameter import _stitch_group
+    from ingestor_etl_spark.protocols.diameter import _stitch_file
 
     msg = g.diameter_msg(272, True, 7, 9, [g.diameter_avp(263, b"abcdef")])
     # six 1-byte-overlapping slices of two messages back to back
@@ -194,9 +194,13 @@ def test_reassembly_order_invariance(order):
             "payload": [segs[i][1] for i in order],
             "src_ip": "a",
             "dst_ip": "b",
+            "src_port": 50000,
+            "dst_port": 3868,
+            "sctp_sid": None,
+            "sctp_ssn": None,
         }
     )
-    out = _stitch_group(pdf)
+    out = _stitch_file(pdf)
     assert len(out) == 2
     assert sorted(out["request"]) == [False, True]
 
