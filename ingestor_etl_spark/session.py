@@ -11,6 +11,7 @@ builder applies — only master/memory come from the environment.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -38,6 +39,20 @@ _DEFAULTS = {
 }
 
 
+@functools.cache
+def _quiet_glob_probe(gateway) -> None:
+    """Before reading a glob (``<dir>/*.pcap``) Spark probes the
+    literal path for a streaming-sink metadata directory and logs the
+    miss as a WARN with a FileNotFoundException trace, although the
+    read goes on normally. At ERROR, a real failure's trace is not
+    lost among them. Once per JVM: the level outlives a stopped
+    session, and a session set up again skips the py4j round trips."""
+    log4j = gateway.jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", log4j.Level.ERROR
+    )
+
+
 def get_spark(app_name: str = "ingestor-etl-spark", **overrides: str) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -51,4 +66,6 @@ def get_spark(app_name: str = "ingestor-etl-spark", **overrides: str) -> SparkSe
         builder = builder.master(f"local[{cpus}]")
     for k, v in {**_DEFAULTS, **overrides}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _quiet_glob_probe(spark.sparkContext._gateway)
+    return spark

@@ -15,8 +15,9 @@ reference's one-process-per-pcap model (models.py:257-263), except
 Spark schedules thousands of files across executors. The
 downstream reassembly stages (Diameter, HTTP) keep that unit: they
 shuffle by file and walk each capture in one Python group, as the
-reference does, so one giant file is one task there too; per-row
-decoders and the correlation joins are not bound to it.
+reference does, so one giant file is one task there too and they use
+every core only when there are at least as many files as cores;
+per-row decoders and the correlation joins are not bound to it.
 ``binaryFile`` prunes on path glob + pushes down
 ``modificationTime``/``length`` filters; frame payloads stay packed
 in Arrow buffers end-to-end.
@@ -31,7 +32,6 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -184,33 +184,6 @@ def frames_from_files(files: DataFrame) -> DataFrame:
     return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 
-_GLOB_CHARS = set("*?[{")
-_BINARY_FILE_COLUMNS = ["path", "modificationTime", "length", "content"]
-
-
-def _capture_files(spark: SparkSession, path: str) -> DataFrame:
-    """``binaryFile`` rows of the files ``path`` names or globs.
-
-    A glob in the last path component only (``<dir>/*.pcap``) is
-    listed as ``<dir>`` with ``pathGlobFilter``: the same files,
-    without Spark probing the literal glob for a sink metadata
-    directory (a WARN with a FileNotFoundException trace). Where that
-    listing is not the glob's — nothing matches, ``key=value``
-    partition directories are found, or Spark rejects the directory
-    layout — the glob itself is read, so the files or the error are
-    the glob's. A subdirectory whose own name matches the pattern is
-    not descended into."""
-    directory, _, name = path.rpartition("/")
-    if directory and _GLOB_CHARS & set(name) and not _GLOB_CHARS & set(directory):
-        try:
-            files = spark.read.format("binaryFile").option("pathGlobFilter", name).load(directory)
-        except (AnalysisException, SparkRuntimeException):  # no directory; mixed layout
-            files = None
-        if files is not None and files.columns == _BINARY_FILE_COLUMNS and files.inputFiles():
-            return files
-    return spark.read.format("binaryFile").load(path)
-
-
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Capture files → frames DataFrame.
 
@@ -218,4 +191,4 @@ def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     payload (BINARY), error``. A file that fails the magic sniff
     produces one error row instead of failing the job (§2.8
     error-row semantics)."""
-    return frames_from_files(_capture_files(spark, path))
+    return frames_from_files(spark.read.format("binaryFile").load(path))

@@ -306,9 +306,9 @@ def test_http_ocs_decode_stage_plan(spark, tmp_path):
 
 
 def test_cli_glob_input_logs_no_missing_file_warning(spark, tmp_path):
-    """A ``<dir>/*.pcap`` ingest reads the directory with a file-name
-    filter, so Spark logs no FileNotFoundException for the literal
-    glob, and the ledger names the same files the glob read names."""
+    """A ``<dir>/*.pcap`` ingest logs no FileNotFoundException for
+    Spark's metadata probe of the literal glob, and the ledger names
+    the files the glob names."""
     import subprocess
     import sys
 

@@ -76,9 +76,8 @@ def test_read_pcap_bad_magic_error_row(spark, tmp_path):
 )
 def test_read_pcap_glob_reads_only_matching_files(spark, tmp_path, layout):
     """``<dir>/*.pcap`` reads the matching files directly in ``<dir>``:
-    not other or hidden names, not subdirectories, and not the
-    ``key=value`` partition directories a read of ``<dir>`` would pick
-    (nor fail on)."""
+    not other or hidden names, not subdirectories, and not ``key=value``
+    partition directories."""
     cap = g.pcap([(1700000000, 5, UDP_PKT)])
     for rel in layout:
         (tmp_path / rel).parent.mkdir(exist_ok=True)
@@ -87,8 +86,13 @@ def test_read_pcap_glob_reads_only_matching_files(spark, tmp_path, layout):
     assert [r.file.rsplit("/", 1)[-1] for r in rows] == ["a.pcap"]
 
 
-def test_read_pcap_glob_matching_nothing_fails(spark, tmp_path):
-    (tmp_path / "a.txt").write_bytes(b"x")
+@pytest.mark.parametrize("layout", [("a.txt",), ("sub/c.pcap",)])
+def test_read_pcap_glob_matching_nothing_fails(spark, tmp_path, layout):
+    """A glob that names no file fails, also when only a subdirectory
+    holds matching names."""
+    for rel in layout:
+        (tmp_path / rel).parent.mkdir(exist_ok=True)
+        (tmp_path / rel).write_bytes(b"x")
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         read_pcap(spark, str(tmp_path / "*.pcap"))
 
