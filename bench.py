@@ -1,4 +1,4 @@
-"""Benchmark harness for the registered queries and the protocol path.
+"""Benchmark harness for the registered queries.
 
 The modes are listed in _USAGE below (`python bench.py --help` prints
 it). Every mode prints ONE JSON line on stdout and nothing else. The
@@ -329,14 +329,6 @@ def main() -> None:
 
     names = [n for n in HEADLINE if n in registry]
 
-    # Protocol throughput, measurement 1 of 2: the inner loop is
-    # already best-of-3, but a contended host window spanning one
-    # invocation has printed a 40% dip. Measuring once here and once
-    # at the end of the bench and reporting the better run means a dip
-    # needs sustained whole-bench contention to show at all; both runs
-    # are recorded so drift stays visible.
-    protocol_first = bench_protocol_throughput(spark)
-
     # Raw-layout headline: the testdata's own parquet (one row group
     # per table → single-task scans). Each query reports its steady
     # time and its cold first run (see _time_query_cold).
@@ -386,18 +378,6 @@ def main() -> None:
             "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
         )
 
-    protocol_second = bench_protocol_throughput(spark)
-    protocol = max(
-        protocol_first, protocol_second, key=lambda p: p["msgs_per_sec"]
-    )
-    protocol = {
-        **protocol,
-        "runs_msgs_per_sec": [
-            protocol_first["msgs_per_sec"],
-            protocol_second["msgs_per_sec"],
-        ],
-    }
-
     raw_total = round(sum(raw_timings.values()), 3)
     split_total = round(sum(split_timings.values()), 3) if split_timings else None
     primary = split_total if split_total is not None else raw_total
@@ -427,7 +407,6 @@ def main() -> None:
         "raw_layout_first_run": raw_first,
         "extended_first_run": extended_first,
         "extended_first_run_total": round(sum(extended_first.values()), 3),
-        "protocol_throughput": protocol,
         "layout_note": _layout_note(sf_dir),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
@@ -442,70 +421,6 @@ def main() -> None:
             fh.write(line + "\n")
     sys.stdout.write(line + "\n")
     sys.stdout.flush()
-
-
-# number of request/answer transactions per generated capture file
-_TXNS_PER_FILE = 2500
-_N_FILES = 8
-
-
-def bench_protocol_throughput(
-    spark, n_files: int = _N_FILES, txns_per_file: int = _TXNS_PER_FILE
-) -> dict:
-    """End-to-end pcap → decode → J1-correlate rate on a synthetic
-    Diameter workload (the reference's actual job shape; its only
-    published metric is per-file processed counts, BASELINE.md).
-
-    Default 8 files × 2500 txns × 2 messages = 40k messages; files
-    are the parallelism unit exactly as in production. bench.py
-    --sf1 runs the 10× shape (80 files / 400k messages) to pin
-    decode+correlate scaling alongside the corpus queries."""
-    import glob
-    import struct as _s
-    import tempfile
-
-    from ingestor_etl_spark import capturegen as g
-    from ingestor_etl_spark.protocols.diameter import correlate_diameter, decode_diameter
-    from ingestor_etl_spark.protocols.net import expand_l4
-    from ingestor_etl_spark.sources.pcap import read_pcap
-
-    cap_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"ingestor_etl_spark_bench_caps_v1_{n_files}x{txns_per_file}",
-    )
-    os.makedirs(cap_dir, exist_ok=True)
-    if len(glob.glob(cap_dir + "/*.pcap")) != n_files:
-        for fno in range(n_files):
-            frames = []
-            for i in range(txns_per_file):
-                hbh = fno * txns_per_file + i
-                sess = f"sess;{fno};{i}".encode()
-                ccr = g.diameter_msg(
-                    272, True, hbh, hbh,
-                    [g.diameter_avp(263, sess), g.subscription_id(0, f"52155{i:07d}")],
-                )
-                cca = g.diameter_msg(
-                    272, False, hbh, hbh,
-                    [g.diameter_avp(263, sess), g.diameter_avp(268, _s.pack("!I", 2001))],
-                )
-                frames.append((1700 + i, 0, g.eth(g.ipv4(g.sctp([(i % 4, 0, 46, ccr)], 40001, 3868), 132))))
-                frames.append((1700 + i, 500, g.eth(g.ipv4(g.sctp([(i % 4, 0, 46, cca)], 3868, 40001), 132, src="10.0.0.2", dst="10.0.0.1"))))
-            with open(os.path.join(cap_dir, f"bench{fno}.pcap"), "wb") as fh:
-                fh.write(g.pcap(frames))
-
-    n_messages = n_files * txns_per_file * 2
-    best, _ = _time_query_cold(
-        lambda: correlate_diameter(
-            decode_diameter(expand_l4(read_pcap(spark, cap_dir + "/*.pcap")))
-        ),
-        3,
-    )
-    return {
-        "pipeline": "pcap->decode->correlate (diameter)",
-        "n_messages": n_messages,
-        "sec": best,
-        "msgs_per_sec": round(n_messages / best),
-    }
 
 
 # ------------------------------------------------------ sf1 scale check
@@ -623,13 +538,6 @@ def _sf1_main() -> None:
     t01 = run_at("/root/testdata/sf0.1")
     t1 = run_at(SF1_DIR)
 
-    # 10× protocol throughput: same decode+correlate pipeline at 80
-    # files / 400k messages — embarrassingly parallel decode + one
-    # keyed shuffle, so the exponent should sit at ≈1.
-    proto01 = bench_protocol_throughput(spark)
-    release_caches()
-    proto1 = bench_protocol_throughput(spark, n_files=80)
-
     # the knn_note reports the census inputs the registered query
     # actually sees (distinct-vector counts OBSERVED in the two
     # corpora), not nominal constants that go stale if the generated
@@ -643,13 +551,6 @@ def _sf1_main() -> None:
         .select("embedding").distinct().count()
     )
     release_caches()
-    protocol = {
-        "sf0_1": proto01,
-        "sf1": proto1,
-        "ratio_sec": round(proto1["sec"] / proto01["sec"], 2),
-        "scaling_exponent": round(math.log10(proto1["sec"] / proto01["sec"]), 3),
-    }
-
     result = {
         "metric": "sf1_scale_check",
         "unit": "sec",
@@ -667,7 +568,6 @@ def _sf1_main() -> None:
             f"{_knn_planes(n_distinct1)} at sf1 ({n_distinct1}); "
             f"no bench-side overrides (fixed base KNN_PLANES={KNN_PLANES})"
         ),
-        "protocol_throughput": protocol,
     }
     print(json.dumps(result))
 
@@ -973,8 +873,8 @@ def _skew_main() -> None:
     # boilerplate cluster in raw crawl data) next to 100k distinct
     # docs. Uncollapsed, the band bucket self-join emits 3 bands ×
     # C(100k,2) ≈ 1.5e10 rows plus a distinct-shuffle over them; the
-    # signature collapse (_sig_clusters) reduces the cluster to ONE
-    # row per band bucket. expand=False reports intra mass as star
+    # signature collapse (_sig_clusters_from_docs) reduces the cluster
+    # to ONE row per band bucket. expand=False reports intra mass as star
     # edges — output linear, connected components unchanged.
     from ingestor_etl_spark.queries.dedup_ops import SALTS
 
@@ -1115,7 +1015,7 @@ def _skew_main() -> None:
 
 
 _USAGE = """usage: python bench.py [--sf1 | --skew | --jdecomp [--sf3]]
-  (no flag)        headline + extended query sets, protocol throughput
+  (no flag)        headline + extended query sets
   --sf1            sf0.1 -> sf1 scaling exponents
   --skew           hot-key blowup-guard stress
   --jdecomp        jaccard-family scale decomposition (sf0.1/0.3/1)

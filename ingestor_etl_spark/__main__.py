@@ -56,7 +56,8 @@ def build_pipeline(spark, protocol: str, input_glob: str):
         decoded = materialize(decode_cap(read_tshark_json(spark, input_glob), with_file=True))
         return decoded.drop("file"), decoded
 
-    frames = expand_l4(read_pcap(spark, input_glob))
+    raw = read_pcap(spark, input_glob)
+    frames = expand_l4(raw)
     if protocol == "diameter":
         from ingestor_etl_spark.protocols.diameter import (
             correlate_diameter,
@@ -67,7 +68,8 @@ def build_pipeline(spark, protocol: str, input_glob: str):
     elif protocol == "gsm_map":
         from ingestor_etl_spark.protocols.gsm_map import decode_gsm_map
 
-        decoded, table = decode_gsm_map(frames), same
+        # raw frames too: a raw-MTP3 (DLT 141) capture has no L4 rows
+        decoded, table = decode_gsm_map(frames, raw), same
     elif protocol == "gtp":
         from ingestor_etl_spark.protocols.gtp import decode_gtp, enrich_gtp_transactions
 

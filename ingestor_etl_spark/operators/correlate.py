@@ -52,18 +52,3 @@ def correlate_full_outer(
     for out_col, (req_col, res_col) in (enrich or {}).items():
         out = out.withColumn(out_col, F.coalesce(F.col(req_col), F.col(res_col)))
     return out
-
-
-def census(correlated: DataFrame, req_marker: str, res_marker: str) -> DataFrame:
-    """Matched / request-only / response-only counts (A2,
-    diameter.py:469-478)."""
-    disposition = (
-        F.when(F.col(req_marker).isNotNull() & F.col(res_marker).isNotNull(), "matched")
-        .when(F.col(req_marker).isNotNull(), "request_only")
-        .otherwise("response_only")
-    )
-    return (
-        correlated.select(disposition.alias("disposition"))
-        .groupBy("disposition")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

@@ -9,12 +9,10 @@ extension in the spirit of SURVEY §8.1.
 Algorithm: iterative min-label propagation — every node starts
 labeled with itself; each round every node takes the min label among
 itself and its neighbors; converged when no label changes. Rounds =
-graph diameter. For 100 TB-scale graphs with long chains, swap the
-propagation step for the large-star/small-star alternation
+graph diameter; near-dup graphs are dense and shallow (diameter ≲ 5).
+Long-chain graphs would want the large-star/small-star alternation
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) which converges in O(log n) rounds with the same
-join-groupBy building blocks; near-dup graphs are dense and shallow
-(diameter ≲ 5), so plain propagation is the right default.
+SoCC'14), which converges in O(log n) rounds.
 
 Every round is two shuffles (join on v, groupBy u) over the same
 key; the label frame is persisted per round and the previous round
@@ -82,97 +80,3 @@ def connected_components(
             break
 
     return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-
-
-def _star_round(sym: DataFrame, large: bool) -> DataFrame:
-    """One large-star or small-star round (Kiveris et al., SoCC'14).
-
-    ``sym`` is the symmetric neighbor list (u, v). m(u) = min over
-    Γ(u) ∪ {u}. Large-star re-points every neighbor v > u at m(u);
-    small-star re-points every neighbor v ≤ u (and u itself) at
-    m(u). Each round is one groupBy(u) + one join on u — the same
-    exchange key, so the shuffle is reused — and edges only ever
-    move toward smaller ids (monotone, hence the O(log n) bound)."""
-    m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    joined = sym.join(m, "u")
-    if large:
-        out = joined.where(F.col("v") > F.col("u")).select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-    else:
-        out = joined.where(F.col("v") <= F.col("u")).select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        ).union(m.select("u", F.col("m").alias("v")))
-    return out.where(F.col("u") != F.col("v")).distinct()
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds — O(log n) rounds regardless of graph diameter, vs the
-    propagation loop's O(diameter). Same contract as
-    ``connected_components``: (node, component=min id) for every
-    node appearing in ≥1 edge.
-
-    This is the 100 TB path for LONG-CHAIN graphs (URL redirect
-    chains, citation paths); near-dup graphs are shallow, so the
-    plain propagation stays the default. Convergence is detected by
-    an (edge-count, xxhash64-sum) fingerprint of the edge set —
-    one tiny aggregate per round instead of a full anti-join."""
-    all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur = _symmetrize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ).localCheckpoint(eager=True)
-
-    def fingerprint(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulation: a long sum of xxhash64
-            # values overflows under ANSI arithmetic
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return row.n, row.h
-
-    prev_fp = None
-    for _ in range(max_iters):
-        # a full phase = large-star then small-star, each on the
-        # re-symmetrized current edge set; lineage truncated per
-        # round exactly as in the propagation loop.
-        cur = _symmetrize(_star_round(cur, large=True)).localCheckpoint(eager=True)
-        cur = _symmetrize(_star_round(cur, large=False)).localCheckpoint(eager=True)
-        fp = fingerprint(cur)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-
-    labels = (
-        cur.groupBy("u")
-        .agg(F.min("v").alias("nbr_min"))
-        .select(
-            F.col("u").alias("node"),
-            F.least("u", "nbr_min").alias("component"),
-        )
-    )
-    # singletons created by star-contraction keep their own id via
-    # the all-nodes frame (every original node must be labeled)
-    return (
-        all_nodes.join(labels, "node", "left_outer")
-        .select(
-            "node", F.coalesce("component", F.col("node")).alias("component")
-        )
-    )

@@ -1,12 +1,9 @@
-"""Physical-layout helpers: co-partitioning, skew salting, plan
+"""Physical-layout helpers: skew salting, stage caching, plan
 inspection (SURVEY §4 — what the reference hand-fused, made
 explicit and reusable).
 
 These are the knobs the operator modules assume at cluster scale:
 
-- correlation/reassembly stages shuffle once on their flow/txn key;
-  `partition_by_key` pins that layout so consecutive stages reuse it
-  instead of re-shuffling;
 - skewed keys (one hot IMSI, one giant capture file) break the
   uniform-hash assumption; `salted_agg` implements the two-phase
   salted aggregation that AQE's skew handling cannot apply to
@@ -22,14 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def partition_by_key(df: DataFrame, keys: Sequence[str], n: int | None = None) -> DataFrame:
-    """Hash-partition by the correlation key so every downstream
-    keyed op (groupBy/applyInPandas/join on the same key) reuses the
-    exchange. With AQE on, prefer letting the first groupBy create
-    the layout; use this only to FORCE co-location across stages."""
-    return df.repartition(n, *[F.col(k) for k in keys]) if n else df.repartition(*[F.col(k) for k in keys])
 
 
 def salted_agg(

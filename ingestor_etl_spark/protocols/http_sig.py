@@ -187,25 +187,25 @@ def http_messages(segments: DataFrame) -> DataFrame:
                 F.col("b_ip"),
                 F.lit(":"),
                 F.col("b_port"),
-                F.split(start_line, " ").getItem(1),
+                F.get(F.split(start_line, " "), 1),
                 F.lit(" "),
             ),
         ).alias("http_request_uri"),
-        F.when(~is_req, F.split(start_line, " ").getItem(1).cast("int")).alias(
+        F.when(~is_req, F.get(F.split(start_line, " "), 1).try_cast("int")).alias(
             "http_response_code"
         ),
         F.regexp_extract(header_block, r"(?im)^content-type\s*:\s*(.+?)\r?$", 1).alias(
             "http_content_type"
         ),
-        F.when(content_length != "", content_length.cast("int")).alias(
+        F.when(content_length != "", content_length.try_cast("int")).alias(
             "http_content_length"
         ),
         F.when(
             content_length != "",
             F.substring(
-                F.split(text, "\r\n\r\n", 2).getItem(1),
+                F.get(F.split(text, "\r\n\r\n", 2), 1),
                 1,
-                F.coalesce(content_length.cast("int"), F.lit(0)),
+                F.coalesce(content_length.try_cast("int"), F.lit(0)),
             ),
         ).alias("body"),
     )

@@ -14,6 +14,9 @@ Parity conventions (see tests/test_oracle_parity.py):
 
 from __future__ import annotations
 
+import os
+import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -48,6 +51,35 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
         return fn
 
     return wrap
+
+
+def fixture_dir(name: str, files: dict[str, bytes]) -> str:
+    """The directory ``<tempdir>/ingestor_etl_spark_<name>`` holding
+    ``files`` (file name -> bytes) for a query that builds its own
+    input. A missing file, or one whose bytes differ, is written under
+    a unique hidden name in the same directory and renamed into place,
+    so a reader (or a concurrent writer) only ever sees a whole file,
+    and Spark's listing skips the hidden name. A file that already
+    holds its bytes is left as it is."""
+    d = os.path.join(tempfile.gettempdir(), f"ingestor_etl_spark_{name}")
+    os.makedirs(d, exist_ok=True)
+    for fname, data in files.items():
+        path = os.path.join(d, fname)
+        try:
+            with open(path, "rb") as fh:
+                if fh.read() == data:
+                    continue
+        except FileNotFoundError:
+            pass
+        tmp = os.path.join(d, f".{fname}.{uuid.uuid4().hex}")
+        try:
+            with open(tmp, "xb") as fh:
+                fh.write(data)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+    return d
 
 
 def load_all() -> dict[str, Query]:

@@ -33,7 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ingestor_etl_spark.catalog import load_table
-from ingestor_etl_spark.queries import register
+from ingestor_etl_spark.queries import fixture_dir, register
 
 # --------------------------------------------------------------- PII
 # RE2/Java-common regex subset: no lookaround, no backreferences.
@@ -484,18 +484,7 @@ def jsonl_fixture_dir() -> str:
     """Deterministic JSONL corpus: 3 clean lines, one malformed line,
     one type-mismatch line (parseable fields kept + flagged), one
     missing-field line (null field, clean)."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "ingestor_etl_spark_jsonl_v1")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "part0.jsonl")
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(_JSONL_LINES))
-        os.replace(tmp, path)
-    return d
+    return fixture_dir("jsonl", {"part0.jsonl": "\n".join(_JSONL_LINES).encode()})
 
 
 @register(
@@ -559,19 +548,7 @@ def xml_fixture_dir() -> str:
     """Deterministic XML corpus: 2 clean docs, one missing-field doc
     (null field, clean), one type-mismatch doc, one broken-markup
     doc."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "ingestor_etl_spark_xml_v1")
-    os.makedirs(d, exist_ok=True)
-    for name, content in _XML_FILES.items():
-        path = os.path.join(d, name)
-        if not os.path.exists(path):
-            tmp = path + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(content)
-            os.replace(tmp, path)
-    return d
+    return fixture_dir("xml", {n: c.encode() for n, c in _XML_FILES.items()})
 
 
 @register(
@@ -680,18 +657,7 @@ _CSV_LINES = (
 def csv_fixture_dir() -> str:
     """Deterministic CSV corpus: three clean rows (one with a quoted
     delimiter), a type-mismatch row, a short row, a long row."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "ingestor_etl_spark_csv_v1")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "part0.csv")
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(_CSV_LINES) + "\n")
-        os.replace(tmp, path)
-    return d
+    return fixture_dir("csv", {"part0.csv": ("\n".join(_CSV_LINES) + "\n").encode()})
 
 
 # NOTE (Spark-version behavior pin): the VALUES block below encodes
@@ -1046,18 +1012,7 @@ _FW_LEN = 20
 def fixedwidth_fixture_dir() -> str:
     """Deterministic fixed-width feed: three clean records, a
     non-numeric id, a truncated record, an overlong record."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "ingestor_etl_spark_fw_v1")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "part0.dat")
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(_FW_LINES) + "\n")
-        os.replace(tmp, path)
-    return d
+    return fixture_dir("fw", {"part0.dat": ("\n".join(_FW_LINES) + "\n").encode()})
 
 
 @register(

@@ -20,11 +20,12 @@ Scale design (100 TB corpus):
   quadratic join is confined to buckets (the whole point of LSH);
 - identical-signature clusters (exact duplicates — the one way a
   "bucket" can be unboundedly hot) are COLLAPSED to one
-  representative before any bucket self-join (_sig_clusters), so
-  duplicate-heavy raw crawls cannot make a bucket quadratic; pair
-  outputs re-expand through membership (oracle-identical), or stay
-  as star edges with expand=False when even the pair contract's
-  quadratic output is unwanted;
+  representative before any bucket self-join
+  (_sig_clusters_from_docs), so duplicate-heavy raw crawls cannot
+  make a bucket quadratic; pair outputs re-expand through
+  membership (oracle-identical), or stay as star edges with
+  expand=False when even the pair contract's quadratic output is
+  unwanted;
 - the exact-Jaccard verifier joins only on shared shingles; its
   cost is quadratic in shingle document-frequency, so at corpus
   scale it runs on LSH candidates (as the verifier stage) or on a
@@ -692,15 +693,6 @@ def _sig_clusters_from_docs(docs: DataFrame):
     return members, reps
 
 
-def _sig_clusters(sigs_df: DataFrame):
-    """_banded_docs + _sig_clusters_from_docs on a raw (doc_id,
-    mh0..mh5) signature relation — the unconditional-collapse entry
-    point, kept for callers that KNOW their input is duplicate-heavy
-    (bench.py --skew)."""
-    docs = _banded_docs(sigs_df)
-    return _sig_clusters_from_docs(docs)
-
-
 def _rep_band_pairs(reps: DataFrame, repartition: bool = True) -> DataFrame:
     """Distinct representative-level pairs (fp_a, fp_b, rep_a, rep_b,
     n_shared_bands) from the per-(band_no, band_key) bucket self-join
@@ -772,10 +764,10 @@ def _band_pairs_from_sigs(sigs_df: DataFrame, expand: bool = True) -> DataFrame:
 def _band_pairs_from_docs(docs: DataFrame, expand: bool = True) -> DataFrame:
     """Candidate pairs from an already-MATERIALIZED banded relation
     (doc_id, band0..bandN, sig_fp — extra columns are inert),
-    identical-signature-collapse guarded (see _sig_clusters). Split
-    out in round 14 so callers that already hold a combined
-    one-pass cache (shingles + bands, e.g. containment_pairs) don't
-    build a second banded cache from scratch.
+    identical-signature-collapse guarded (see _sig_clusters_from_docs).
+    Callers that already hold a combined one-pass cache (shingles +
+    bands, e.g. containment_pairs) pass it here instead of building a
+    second banded cache from scratch.
 
     expand=True (default, the registered-query contract): exact LSH
     pair semantics — every (doc_a < doc_b) sharing ≥1 band bucket.
@@ -1552,7 +1544,7 @@ def exact_substring_dedup(spark, sf_dir):
     - runs on the EXACT-DEDUPED canonical relation (min doc_id per
       identical text) — identical documents share every window, so
       canonicalization first is what bounds the seed join the same
-      way _sig_clusters bounds the MinHash bucket joins;
+      way _sig_clusters_from_docs bounds the MinHash bucket joins;
     - boilerplate windows (shared by > {cap} distinct docs — license
       headers, navigation chrome) are cut by the same degree-cap
       pattern as stop_shingle_cut, bounding per-gram fan-out at

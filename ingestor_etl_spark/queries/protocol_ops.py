@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import struct
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -38,28 +37,12 @@ from ingestor_etl_spark.protocols.http_sig import (
 from ingestor_etl_spark.protocols.net import expand_l4
 from ingestor_etl_spark.protocols.sip import call_summary, decode_sip
 from ingestor_etl_spark.protocols.smpp import decode_smpp, group_smpp_transactions
-from ingestor_etl_spark.queries import register
+from ingestor_etl_spark.queries import fixture_dir, register
 from ingestor_etl_spark.sources.pcap import read_pcap
 
-_VERSION = "v1"  # bump when any fixture changes
 
-
-def _demo_dir() -> str:
-    d = os.path.join(
-        tempfile.gettempdir(), f"ingestor_etl_spark_demo_{_VERSION}"
-    )
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _write_once(name: str, data: bytes) -> str:
-    path = os.path.join(_demo_dir(), name)
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        os.replace(tmp, path)
-    return path
+def _demo_file(name: str, data: bytes) -> str:
+    return os.path.join(fixture_dir("demo", {name: data}), name)
 
 
 # ------------------------------------------------------------- fixtures
@@ -101,7 +84,7 @@ def _diameter_capture() -> str:
         (1703, 0, g.eth(g.ipv4(g.tcp(split[:half], 50000, 3868, seq=1, ack=1), 6))),
         (1703, 5, g.eth(g.ipv4(g.tcp(split[half:], 50000, 3868, seq=1 + half, ack=1), 6))),
     ]
-    return _write_once("diameter.pcap", g.pcap(frames))
+    return _demo_file("diameter.pcap", g.pcap(frames))
 
 
 def _gtp_capture() -> str:
@@ -116,7 +99,7 @@ def _gtp_capture() -> str:
         (1800, 1, g.eth(g.ipv4(g.udp(res, 2123, 40000), 17, src="10.0.0.2", dst="10.0.0.1"))),
         (1800, 2, g.eth(g.ipv4(g.udp(v1req, 40000, 2123), 17))),
     ]
-    return _write_once("gtp.pcap", g.pcap(frames))
+    return _demo_file("gtp.pcap", g.pcap(frames))
 
 
 def _sip_capture() -> str:
@@ -139,7 +122,7 @@ def _sip_capture() -> str:
         (1900, 1, g.eth(g.ipv4(g.udp(ok, 5060, 5060), 17, src="10.0.0.2", dst="10.0.0.1"))),
         (1900, 2, g.eth(g.ipv4(g.udp(invite("call-b", "300", "400", None), 5060, 5060), 17))),
     ]
-    return _write_once("sip.pcap", g.pcap(frames))
+    return _demo_file("sip.pcap", g.pcap(frames))
 
 
 def _smpp_capture() -> str:
@@ -151,7 +134,7 @@ def _smpp_capture() -> str:
         (2000, 1, g.eth(g.ipv4(g.tcp(resp, 2775, 40000, flags=24), 6, src="10.0.0.2", dst="10.0.0.1"))),
         (2000, 2, g.eth(g.ipv4(g.tcp(deliver, 2775, 40000, flags=24), 6, src="10.0.0.2", dst="10.0.0.1"))),
     ]
-    return _write_once("smpp.pcap", g.pcap(frames))
+    return _demo_file("smpp.pcap", g.pcap(frames))
 
 
 def _gsm_map_capture() -> str:
@@ -173,7 +156,7 @@ def _gsm_map_capture() -> str:
         (2100, 3, g.eth(g.ipv4(g.sctp([(0, 3, 3, g.m3ua(g.sccp_xudt(seg[:half], True, 1, 0x70001)))], 2905, 2905), 132))),
         (2100, 4, g.eth(g.ipv4(g.sctp([(0, 4, 3, g.m3ua(g.sccp_xudt(seg[half:], False, 0, 0x70001)))], 2905, 2905), 132))),
     ]
-    return _write_once("gsm_map.pcap", g.pcap(frames))
+    return _demo_file("gsm_map.pcap", g.pcap(frames))
 
 
 def _http_ocs_capture() -> str:
@@ -197,7 +180,7 @@ def _http_ocs_capture() -> str:
         (2200, 1, g.eth(g.ipv4(g.tcp(req[cut:], 45000, 8080, seq=1000 + cut, ack=555, flags=24), 6, src="10.1.1.1", dst="10.1.1.2"))),
         (2200, 2, g.eth(g.ipv4(g.tcp(res, 8080, 45000, seq=555, ack=1000 + len(req), flags=24), 6, src="10.1.1.2", dst="10.1.1.1"))),
     ]
-    return _write_once("http_ocs.pcap", g.pcap(frames))
+    return _demo_file("http_ocs.pcap", g.pcap(frames))
 
 
 def _cap_json() -> str:
@@ -233,7 +216,7 @@ def _cap_json() -> str:
             }
         },
     ]
-    return _write_once("cap.json", json.dumps(pkts, indent=1).encode())
+    return _demo_file("cap.json", json.dumps(pkts, indent=1).encode())
 
 
 # ------------------------------------------------------------- queries
@@ -550,7 +533,7 @@ def _http_generic_capture() -> str:
         (2600, 0, g.eth(g.ipv4(g.tcp(post(b"/camel", camel_body), 46000, 8081, seq=10, ack=20, flags=24), 6))),
         (2600, 1, g.eth(g.ipv4(g.tcp(post(b"/diam", diam_body), 46002, 8081, seq=30, ack=40, flags=24), 6))),
     ]
-    return _write_once("http_generic.pcap", g.pcap(frames))
+    return _demo_file("http_generic.pcap", g.pcap(frames))
 
 
 @register(
@@ -593,7 +576,7 @@ def _http_ss7_capture() -> str:
         + b"\r\nContent-Type: text/xml\r\n\r\n" + sms
     )
     frames = [(2700, 0, g.eth(g.ipv4(g.tcp(req, 47000, 8082, seq=5, ack=6, flags=24), 6)))]
-    return _write_once("http_ss7.pcap", g.pcap(frames))
+    return _demo_file("http_ss7.pcap", g.pcap(frames))
 
 
 @register(
@@ -656,7 +639,7 @@ def _sip_legs_capture() -> str:
         (2800, 0, invite("pm-1", "anonymous", "anonymous", (9001, 2), "10.9.9.1", "10.9.9.2")),
         (2800, 1, invite("ice-1", "5215550123", "5215550456", (9001, 2), "10.8.8.1", "10.8.8.2")),
     ]
-    return _write_once("sip_legs.pcap", g.pcap(frames))
+    return _demo_file("sip_legs.pcap", g.pcap(frames))
 
 
 @register(
@@ -754,7 +737,7 @@ def _tshark_fields_capture() -> str:
         (2300, 5, g.eth(g.ipv4(g.sctp([(1, 1, 46, cca)], 3868, 40001), 132, src="10.0.0.2", dst="10.0.0.1"))),
         (2300, 6, g.eth(g.ipv4(g.sctp([(1, 2, 46, m1), (1, 3, 46, m2)], 40001, 3868), 132))),
     ]
-    return _write_once("tshark_fields_a.pcap", g.pcap(frames))
+    return _demo_file("tshark_fields_a.pcap", g.pcap(frames))
 
 
 _TSHARK_FIELDS_ORACLE = """

@@ -1,1 +1,1 @@
-"""Sinks: JDBC bulk load, parquet tables, ingestion ledger."""
+"""Sinks: JDBC bulk load, ingestion ledger."""

@@ -55,20 +55,3 @@ def write_jdbc(
     if num_partitions:
         opts["numPartitions"] = str(num_partitions)
     writer.options(**opts).save()
-
-
-def write_parquet_table(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Columnar sink for analytics outputs. Partition by low-
-    cardinality selector columns (e.g. capture date / protocol) so
-    downstream reads partition-prune; the reference's b-tree
-    selector indexes (models.py ``index=True``) map to partition +
-    min/max pruning here."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

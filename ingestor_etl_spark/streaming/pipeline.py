@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -464,85 +463,4 @@ def stream_interval_join(
         F.col(f"r.{ts_col}").alias("right_ts"),
         F.col("l.event_id").alias("left_event_id"),
         F.col("r.event_id").alias("right_event_id"),
-    )
-
-
-_FUNNEL_STAGES = ("view", "click", "purchase")
-_FUNNEL_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("stage_no", IntegerType()),
-        StructField("stage", StringType()),
-        StructField("ts_us", LongType()),
-    ]
-)
-_FUNNEL_STATE = StructType(
-    [
-        StructField("t1", LongType()),
-        StructField("t2", LongType()),
-        StructField("t3", LongType()),
-    ]
-)
-
-
-def stream_funnel(events: DataFrame, timeout_ms: int = 86_400_000) -> DataFrame:
-    """Streaming ordered-funnel tracking (the §2.9 stateful form of
-    queries/events_ops.funnel_conversion): per-user keyed state
-    holds the entry time of each reached stage; a stage advances
-    only on an event STRICTLY AFTER the previous stage's entry, and
-    each advancement emits one (user, stage, ts) row. State is three
-    longs per user, and BOUNDED BY ACTIVE USERS: a user idle past
-    ``timeout_ms`` (default 24 h — the funnel attribution window) is
-    evicted silently, so total state is 3 longs × users-active-
-    within-window, never all users ever seen. A user returning after
-    eviction restarts at stage 1 (idempotent consumers key on
-    (user, stage), as the recovery test does).
-
-    Ordering contract: stage entries are computed incrementally, so
-    per-user event-time order across micro-batches is assumed
-    (the standard streaming-funnel simplification — a late 'view'
-    older than the recorded stage-1 time would need retraction,
-    which batch funnel_conversion handles exactly). Requires columns
-    (user_id, event_type, ts)."""
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        t1 = t2 = t3 = None
-        if state.exists:
-            t1, t2, t3 = state.get
-        rows = []
-        evs = []
-        for pdf in pdfs:
-            evs.extend(zip(pdf["ts_us"], pdf["event_type"]))
-        for ts, typ in sorted(evs):
-            if t1 is None:
-                if typ == _FUNNEL_STAGES[0]:
-                    t1 = int(ts)
-                    rows.append((user_id, 1, _FUNNEL_STAGES[0], t1))
-            elif t2 is None:
-                if typ == _FUNNEL_STAGES[1] and ts > t1:
-                    t2 = int(ts)
-                    rows.append((user_id, 2, _FUNNEL_STAGES[1], t2))
-            elif t3 is None:
-                if typ == _FUNNEL_STAGES[2] and ts > t2:
-                    t3 = int(ts)
-                    rows.append((user_id, 3, _FUNNEL_STAGES[2], t3))
-        state.update((t1, t2, t3))
-        state.setTimeoutDuration(timeout_ms)
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FUNNEL_OUT.fields]
-            )
-
-    src = events.select(
-        "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
-    )
-    return src.groupBy("user_id").applyInPandasWithState(
-        track,
-        _FUNNEL_OUT,
-        _FUNNEL_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
     )

@@ -66,6 +66,33 @@ def test_cli_gtp_batch(spark, tmp_path):
     assert spark.read.parquet(out).count() >= 1
 
 
+def test_cli_gsm_map_raw_mtp3_capture(spark, tmp_path):
+    """``--protocol gsm_map`` decodes a raw-MTP3 (DLT 141) capture,
+    which has no L4 rows: one table row and one ledger row."""
+    import struct
+
+    word = (77 << 14) | 1234
+    mtp3 = b"\x83" + struct.pack("!I", word)[::-1] + g.sccp_udt(
+        g.tcap_msg("begin", otid=0xBB02)
+    )
+    drop = tmp_path / "caps"
+    drop.mkdir()
+    (drop / "mtp3.pcapng").write_bytes(g.pcapng([(1_700_000_002, mtp3)], dlt=141))
+    out, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
+    rc = main([
+        "--protocol", "gsm_map",
+        "--input", str(drop) + "/*.pcapng",
+        "--out", out,
+        "--ledger", ledger,
+    ])
+    assert rc == 0
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 1 and rows[0].tcap_otid == 0xBB02
+    state = current_ledger_state(spark, ledger).toPandas()
+    assert len(state) == 1 and state.iloc[0].processed == 1
+    assert state.iloc[0].filename.endswith("/mtp3.pcapng")
+
+
 def test_cli_query_mode_writes_parquet(spark, tmp_path):
     from ingestor_etl_spark.__main__ import main
 

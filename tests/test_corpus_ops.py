@@ -117,3 +117,26 @@ def test_csv_batch_stream_parity(spark, tmp_path):
     assert clean.count() == 3 and "_corrupt" not in clean.columns
     err = errors.collect()
     assert len(err) == 3 and all(e.file.endswith("part0.csv") for e in err)
+
+
+def test_fixture_dir_writes_each_file_whole_and_once(tmp_path, monkeypatch):
+    """A fixture file whose bytes differ is replaced, one that already
+    holds its bytes is left alone, and no temp file is left behind."""
+    import os
+    import tempfile
+
+    from ingestor_etl_spark.queries import fixture_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    files = {"a.txt": b"alpha\n", "b.bin": b"\x00\x01"}
+    d = fixture_dir("t", files)
+    assert d == str(tmp_path / "ingestor_etl_spark_t")
+    a = os.path.join(d, "a.txt")
+    with open(a, "wb") as fh:
+        fh.write(b"stale")
+    fixture_dir("t", files)
+    assert sorted(os.listdir(d)) == ["a.txt", "b.bin"]
+    assert {n: open(os.path.join(d, n), "rb").read() for n in files} == files
+    os.utime(a, ns=(0, 0))
+    fixture_dir("t", files)
+    assert os.stat(a).st_mtime_ns == 0

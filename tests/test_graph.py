@@ -3,12 +3,7 @@ semantics for near-dup dedup."""
 
 from __future__ import annotations
 
-import pytest
-
-from ingestor_etl_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from ingestor_etl_spark.operators.graph import connected_components
 
 
 def test_components_min_label(spark):
@@ -41,57 +36,3 @@ def test_empty_edges(spark):
         [], StructType([StructField("a", LongType()), StructField("b", LongType())])
     )
     assert connected_components(empty, src="a", dst="b").count() == 0
-
-
-# ------------------------------------------------- large/small-star
-def test_star_matches_propagation_fixed(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (10, 11)], ["a", "b"]
-    )
-    prop = {
-        (r.node, r.component)
-        for r in connected_components(edges, src="a", dst="b").collect()
-    }
-    star = {
-        (r.node, r.component)
-        for r in connected_components_star(edges, src="a", dst="b").collect()
-    }
-    assert star == prop
-
-
-def test_star_long_chain_logarithmic(spark):
-    """The star alternation's whole reason to exist: a path graph of
-    diameter 30 must converge well under 30 phases (O(log n))."""
-    edges = spark.createDataFrame([(i, i + 1) for i in range(30)], ["a", "b"])
-    got = connected_components_star(edges, src="a", dst="b", max_iters=8).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == 31
-
-
-@pytest.mark.slow
-def test_star_random_graphs_match(spark):
-    import random
-
-    for seed in (11, 23):
-        rng = random.Random(seed)
-        edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, ["a", "b"])
-        prop = {
-            (r.node, r.component)
-            for r in connected_components(df, src="a", dst="b").collect()
-        }
-        star = {
-            (r.node, r.component)
-            for r in connected_components_star(df, src="a", dst="b").collect()
-        }
-        assert star == prop, f"seed {seed}"
-
-
-def test_star_empty_edges(spark):
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    empty = spark.createDataFrame(
-        [], StructType([StructField("a", LongType()), StructField("b", LongType())])
-    )
-    assert connected_components_star(empty, src="a", dst="b").count() == 0

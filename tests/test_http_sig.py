@@ -156,6 +156,36 @@ def test_http_nocontent_and_dialects(spark, tmp_path):
     assert smsrow.imsi == "33401" and smsrow.msc == "mscB" and smsrow.udhi == False  # noqa: E712
 
 
+def test_http_malformed_messages_become_rows(spark, tmp_path):
+    """Under ANSI mode (Spark's default) a malformed message is a row
+    with NULL fields, not a failed job: a Content-Length header with no
+    blank line, a start line that is only ``HTTP/1.1``, and a
+    Content-Length that overflows an int."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    cases = {
+        "no_blank_line": _flow(b"POST /ocs HTTP/1.1\r\nContent-Length: 5\r\n", (2500, 0), seq=1, ack=1),
+        "bare_version": _flow(b"HTTP/1.1\r\n\r\n", (2500, 0), seq=1, ack=1),
+        "huge_length": _flow(
+            b"HTTP/1.1 200 OK\r\nContent-Length: 99999999999\r\n\r\nabc",
+            (2500, 0), seq=1, ack=1, reverse=True,
+        ),
+    }
+    for name, frame in cases.items():
+        (tmp_path / f"{name}.pcap").write_bytes(g.pcap([frame]))
+    msgs = http_messages(expand_l4(read_pcap(spark, str(tmp_path / "*.pcap"))))
+    got = msgs.collect()
+    rows = {r.file.rsplit("/", 1)[-1][: -len(".pcap")]: r for r in got}
+    assert len(got) == len(cases) and sorted(rows) == sorted(cases)
+    no_blank = rows["no_blank_line"]
+    assert no_blank.http_request_method == "POST"
+    assert no_blank.http_content_length == 5 and no_blank.body is None
+    bare = rows["bare_version"]
+    assert bare.http_is_request and bare.http_request_uri is None
+    huge = rows["huge_length"]
+    assert huge.http_response_code == 200 and huge.http_content_length is None
+    assert huge.body == ""
+
+
 CLIENT, SERVER = ("10.1.1.1", 45000), ("10.1.1.2", 8080)
 
 

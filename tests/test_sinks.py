@@ -1,16 +1,10 @@
-"""Sink tests: schema-parity helpers, pcap round-trip, ledger,
-streaming dedup."""
+"""Sink tests: schema-parity helpers, ledger, streaming dedup."""
 
 from __future__ import annotations
 
-from ingestor_etl_spark import capturegen as g
 from ingestor_etl_spark.sinks.jdbc import frames_list_as_string, with_epoch_columns
 from ingestor_etl_spark.sinks.ledger import append_ledger, current_ledger_state, file_counters, ledger_rows
-from ingestor_etl_spark.sinks.pcap_sink import write_pcap_files
-from ingestor_etl_spark.sources.pcap import read_pcap
 from ingestor_etl_spark.streaming.pipeline import stream_dedup
-
-UDP = g.eth(g.ipv4(g.udp(b"x" * 10, 1, 2), 17))
 
 
 def test_schema_parity_helpers(spark):
@@ -22,19 +16,6 @@ def test_schema_parity_helpers(spark):
     assert out.frames_list == "1 2 3"  # models.py String form
     assert out.useconds_epoch == 123456
     assert out.time_epoch == 1704067200
-
-
-def test_pcap_sink_roundtrip(spark, tmp_path):
-    src = tmp_path / "in.pcap"
-    src.write_bytes(g.pcap([(100, 5, UDP), (101, 6, UDP)]))
-    frames = read_pcap(spark, str(src))
-    counts = write_pcap_files(frames, str(tmp_path / "out"))
-    assert sum(counts.values()) == 2
-    # round-trip: the re-written capture decodes identically
-    (out_path,) = counts
-    again = read_pcap(spark, out_path).orderBy("frame_no").collect()
-    assert [r.frame_no for r in again] == [1, 2]
-    assert bytes(again[0].payload) == UDP
 
 
 def test_ledger_lifecycle(spark, tmp_path):
