@@ -20,7 +20,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
 
 from ingestor_etl_spark.plans.layout import release_caches  # noqa: E402
 from ingestor_etl_spark.queries import load_all  # noqa: E402
@@ -308,7 +309,14 @@ def _session(app_name: str):
     progress bars are off and JVM unified logging goes to stderr: by
     default the JVM writes GC warnings ("[warning][gc,alloc] ...
     Retried waiting for GCLocker too often") to stdout under memory
-    pressure, in the middle of the line a caller parses."""
+    pressure, in the middle of the line a caller parses.
+
+    Spark's Python workers import the package too, from any working
+    directory: they inherit the ``PYTHONPATH`` the JVM starts with,
+    not this process's ``sys.path``."""
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if _REPO not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_REPO, *filter(None, paths)])
     spark = get_spark(
         app_name,
         **{

@@ -40,7 +40,9 @@ def audit_query(df) -> dict[str, object]:
         "python_evals": txt.count("ArrowEvalPython")
         + txt.count("BatchEvalPython")
         + txt.count("FlatMapGroupsInPandas")
-        + txt.count("MapInPandas"),
+        + txt.count("MapInPandas")
+        + txt.count("FlatMapGroupsInArrow")
+        + txt.count("MapInArrow"),
         "sort_merge_joins": facts.get("sort_merge_joins", 0),
         # formatted explain nests the FULL lineage under every cached
         # subtree reuse, so exchange/pyeval counts overstate what
@@ -56,6 +58,8 @@ _PYEVAL_EXECS = {
     "FlatMapGroupsInPandasExec",
     "FlatMapGroupsInPandasWithStateExec",
     "MapInPandasExec",
+    "FlatMapGroupsInArrowExec",
+    "MapInArrowExec",
 }
 
 

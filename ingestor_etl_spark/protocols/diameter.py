@@ -8,10 +8,12 @@ with bidirectional msisdn/imsi enrichment, diameter.py:302-339).
 Spark shape:
 
     segments (net.expand_l4, port-3868 filter is native)
-      → groupBy(file) + applyInPandas stitcher         [R1/R2]
-          one shuffle; inside each file's group ``stitch`` runs
-          once per stream key, the reference's reassembly dict keys
-          (streaming keeps state per stream key instead)
+      → map_files(stitch_file): groupBy(file) +      [R1/R2]
+          applyInArrow, one shuffle; inside each file's group
+          ``stitch`` runs once per stream key, the reference's
+          reassembly dict keys (streaming keeps state per stream key
+          instead); the walk sees ``None`` for NULL, so TCP's
+          missing SCTP sid/ssn key like any other value
       → native filter command_code != 280               [DWR drop]
       → self-join requests ↔ answers on the txn key     [J1]
 
@@ -25,7 +27,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterable, Iterator, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ingestor_etl_spark.operators.correlate import correlate_full_outer
+from ingestor_etl_spark.protocols import map_files
 
 DIAMETER_PORT = 3868
 CMD_DEVICE_WATCHDOG = 280
@@ -179,26 +181,20 @@ def stitch(
 STREAM_KEY = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
 
 
-def _stitch_file(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch R1/R2: one capture file's segments, each ``STREAM_KEY``
-    stream stitched from an empty state in frame order."""
-    pdf = pdf.sort_values("frame_no", kind="stable")
-    # TCP rows have no SCTP sid/ssn; as -1 their keys compare equal (NaN != NaN)
-    keys = zip(*(
-        (pdf[c].astype("float64").fillna(-1) if c.startswith("sctp_") else pdf[c]).tolist()
-        for c in STREAM_KEY[1:]
-    ))
-    segs = zip(pdf["frame_no"].tolist(), pdf["ts_us"].tolist(), pdf["payload"].tolist())
+def stitch_file(rows: Iterable[tuple]) -> list[tuple]:
+    """Batch R1/R2 over one capture file's segments, each a
+    ``STREAM_KEY`` (less ``file``) + (frame_no, ts_us, payload) tuple:
+    each stream is stitched from an empty state in frame order →
+    ``MESSAGE_SCHEMA`` tuples less ``file``. TCP rows have ``None``
+    SCTP sid/ssn, which compare equal in the stream key."""
     streams: dict[tuple, list[tuple]] = {}
-    for key, seg in zip(keys, segs):
-        streams.setdefault(key, []).append(seg)
-    file = pdf["file"].iloc[0]
-    rows = [
-        (file, fl, ts_us, src, dst) + fields
+    for row in sorted(rows, key=lambda row: row[6]):
+        streams.setdefault(row[:6], []).append(row[6:])
+    return [
+        (fl, ts_us, src, dst) + fields
         for (src, dst, *_), stream in streams.items()
         for fl, ts_us, fields in stitch(stream)[0]
     ]
-    return pd.DataFrame(rows, columns=_COLS)
 
 
 def diameter_flows(segments: DataFrame) -> DataFrame:
@@ -220,7 +216,7 @@ def decode_diameter(segments: DataFrame) -> DataFrame:
     never cross-talk. One Python group per capture file walks all of
     its streams, as the reference walks one capture. Device-Watchdog
     (cmd 280) is dropped natively after decode (diameter.py:128-130)."""
-    msgs = diameter_flows(segments).groupBy("file").applyInPandas(_stitch_file, MESSAGE_SCHEMA)
+    msgs = map_files(diameter_flows(segments), MESSAGE_SCHEMA, stitch_file)
     return (
         msgs.where(F.col("command_code") != CMD_DEVICE_WATCHDOG)
         .withColumn("ts", F.timestamp_micros("ts_us"))

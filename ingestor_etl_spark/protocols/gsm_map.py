@@ -15,10 +15,10 @@ component tag), all reachable by tag inspection without schema
 compilation. Extraction rules are documented per-field below and
 golden-tested against hand-built BER fixtures.
 
-Spark shape: stage-1 mapInPandas (M3UA/MTP3/SCCP walk) → R3 as a
+Spark shape: stage-1 ``map_rows`` (M3UA/MTP3/SCCP walk) → R3 as a
 groupBy on the 3-byte segmentation local reference (only segmented
 rows shuffle; unsegmented pass straight through) → stage-2
-mapInPandas (TCAP field extraction). All filters before stage 1 are
+``map_rows`` (TCAP field extraction). All filters before stage 1 are
 native (SCTP PPID == 3 — P7 — prunes non-M3UA chunks inside the
 parquet/Arrow scan before any Python runs).
 """

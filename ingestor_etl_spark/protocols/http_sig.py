@@ -14,17 +14,16 @@ redesigned below).
 Pairing model (R6): a request keys itself by (flow, its ACK); the
 matching response keys by (reversed flow, its SEQ) — TCP guarantees
 these coincide, so both sides of an exchange share one pairing key
-``pair_id``. Continuation segments carry no start line; they claim
-the request key they would carry first, then the response key (same
-precedence as the reference's two dict probes). Start lines are
-classified by native Spark columns; the keying and the body
-concatenation are one plain-Python walk per capture file
-(``pair_segments``, under ``groupBy(file).applyInPandas``), the
-reference's one sequential pass over a capture. The walk collects
-every start key of the file before any continuation probes, so the
-reference's out-of-order "lookahead" patch-up
-(http_ss7_ingestor.py:186-191) is unnecessary — arrival order
-cannot matter in batch.
+``pair_id``. Continuation segments carry no start line; each joins
+the message whose bytes it continues in TCP sequence on its own
+4-tuple, requests and responses alike. Start lines are classified by
+native Spark columns; the keying and the body concatenation are one
+plain-Python walk per capture file (``pair_segments``, under
+``protocols.map_files``), the reference's one sequential pass over a
+capture. The walk sees the whole file before it joins any
+continuation, so the reference's out-of-order "lookahead" patch-up
+(http_ss7_ingestor.py:186-191) is unnecessary — arrival order cannot
+matter in batch.
 
 S9 redesign: the reference writes responses first to read back
 autogenerated row ids (``return_defaults=True``) and stitches them
@@ -34,8 +33,8 @@ frame number, unique within a capture), so ``http_response_in`` is
 a pure column and the link is computed before any sink runs.
 
 XML bodies are parsed with xmltodict (the same public library the
-reference uses, requirements.txt:8) inside Arrow-batched pandas
-UDF-style mapInPandas extractors — one per dialect.
+reference uses, requirements.txt:8) inside one ``mapInArrow``
+extractor per dialect.
 """
 
 from __future__ import annotations
@@ -43,9 +42,10 @@ from __future__ import annotations
 import html as _html
 from collections.abc import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -56,6 +56,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ingestor_etl_spark.protocols import map_files, to_arrow
 
 try:
     import xmltodict
@@ -109,34 +111,31 @@ def pair_segments(rows: Iterable[tuple]) -> list[tuple]:
     A retransmission (same 4-tuple, seq and ack) keeps its lowest
     frame (http_ingestor.py:412-414). A request start keys by (flow,
     ack), a response start by (reversed flow, seq). A continuation
-    claims the request key it would carry, else the response key,
-    else nothing (http_ocs_ingestor.py:226-248). Each group's parts
-    concatenate in frame order; ts/seq/ack come from its first."""
+    joins the message whose bytes it continues in TCP sequence: same
+    4-tuple, its seq the start's seq plus the bytes before it
+    (http_ocs_ingestor.py:226-248 joins them by key probes, which
+    miss a response's continuations). A key's parts concatenate in
+    that order, its starts in frame order; ts/seq/ack come from its
+    first start."""
     first: dict[tuple, tuple] = {}
     for seg in sorted(rows, key=lambda seg: seg[0]):
         first.setdefault(seg[2:8], seg)
-    req_keys = {(s[2], s[3], s[4], s[5], s[7]) for s in first.values() if s[8] == "req"}
-    res_keys = {(s[4], s[5], s[2], s[3], s[6]) for s in first.values() if s[8] == "res"}
+    # (4-tuple, seq) → the lowest-frame continuation starting there
+    conts = {seg[2:7]: seg for seg in reversed(first.values()) if seg[8] is None}
     groups: dict[tuple, list[tuple]] = {}
-    for frame_no, ts_us, src, sport, dst, dport, seq, ack, side, payload in first.values():
-        as_req, as_res = (src, sport, dst, dport, ack), (dst, dport, src, sport, seq)
-        if side == "req" or (side is None and as_req in req_keys):
-            key = as_req + ("req",)
-        elif side == "res" or (side is None and as_res in res_keys):
-            key = as_res + ("res",)
-        else:
+    for seg in first.values():
+        _, _, src, sport, dst, dport, seq, ack, side, _ = seg
+        if side is None:
             continue
-        groups.setdefault(key, []).append((frame_no, ts_us, seq, ack, payload))
+        key = (src, sport, dst, dport, ack, "req") if side == "req" else (dst, dport, src, sport, seq, "res")
+        parts = groups.setdefault(key, [])
+        while seg is not None:
+            parts.append(seg)
+            seg = conts.pop((src, sport, dst, dport, (seg[6] + len(seg[9])) & 0xFFFFFFFF), None)
     return [
-        key + ([p[0] for p in parts], *parts[0][1:4], b"".join(p[4] for p in parts))
+        key + ([p[0] for p in parts], parts[0][1], parts[0][6], parts[0][7], b"".join(p[9] for p in parts))
         for key, parts in groups.items()
     ]
-
-
-def _pair_file(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = pair_segments(zip(*(pdf[c].tolist() for c in SEGMENT_COLS)))
-    file = pdf["file"].iloc[0]
-    return pd.DataFrame([(file,) + r for r in rows], columns=PAIRED_SCHEMA.fieldNames())
 
 
 def http_messages(segments: DataFrame) -> DataFrame:
@@ -160,7 +159,7 @@ def http_messages(segments: DataFrame) -> DataFrame:
         )
         .select("file", *SEGMENT_COLS)
     )
-    grouped = tcp.groupBy("file").applyInPandas(_pair_file, PAIRED_SCHEMA)
+    grouped = map_files(tcp, PAIRED_SCHEMA, pair_segments)
 
     text = F.col("payload").cast("string")
     start_line = F.split(text, "\r\n").getItem(0)
@@ -467,37 +466,35 @@ def parse_generic_body(body: str | None, state: str | None, dialect: str) -> dic
 
 
 def _extract(messages: DataFrame, schema: StructType, fn) -> DataFrame:
-    """Attach dialect fields to each message row via mapInPandas."""
-    in_cols = messages.columns
-    out_schema = StructType(
-        [f for f in messages.schema.fields if f.name != "body"] + list(schema.fields)
-    )
-    extra = [f.name for f in schema.fields]
+    """Attach dialect fields to each message row in one ``mapInArrow``
+    pass: ``body`` is replaced by ``schema``'s columns, and a row whose
+    body parsed to nothing is dropped like the reference's ``return
+    None`` paths."""
+    out_schema = StructType([f for f in messages.schema.fields if f.name != "body"] + schema.fields)
+    extra = to_arrow_schema(schema)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = []
-            for body, clen in zip(pdf["body"], pdf["http_content_length"]):
-                if pd.isna(clen):
-                    state = "noContent"  # http_ocs_ingestor.py:304-307
-                elif not body:
-                    state = "httpIncomplete"  # :310-313
-                else:
-                    state = None
-                try:
-                    parsed.append(fn(body, state))
-                except Exception:
-                    parsed.append({})
-            keep = pdf.drop(columns=["body"])
-            for name in extra:
-                keep[name] = [p.get(name) for p in parsed]
-            # rows whose body parsed to nothing are dropped like the
-            # reference's `return None` paths
-            mask = [bool(p) for p in parsed]
-            yield keep[pd.Series(mask, index=keep.index)]
+    def parse(body: str | None, clen: int | None) -> dict:
+        if clen is None:
+            state = "noContent"  # http_ocs_ingestor.py:304-307
+        elif not body:
+            state = "httpIncomplete"  # :310-313
+        else:
+            state = None
+        try:
+            return fn(body, state)
+        except Exception:
+            return {}
 
-    assert "body" in in_cols
-    return messages.mapInPandas(gen, out_schema)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            bodies, clens = (batch.column(c).to_pylist() for c in ("body", "http_content_length"))
+            parsed = [parse(body, clen) for body, clen in zip(bodies, clens)]
+            out = batch.drop_columns(["body"])
+            for f in extra:
+                out = out.append_column(f, to_arrow([p.get(f.name) for p in parsed], f.type))
+            yield out.filter(pa.array([bool(p) for p in parsed]))
+
+    return messages.mapInArrow(run, out_schema)
 
 
 def extract_ocs(messages: DataFrame) -> DataFrame:

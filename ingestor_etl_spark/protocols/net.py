@@ -8,7 +8,7 @@ flags/seq/ack (diameter.py:341-355), the SCTP DATA-chunk walk
 (sigshark.py:141-204) — which collapses to emitting one row per
 chunk right here instead of rewriting a pcap.
 
-One ``mapInPandas`` pass per file partition; downstream protocol
+One ``map_rows`` pass per file partition; downstream protocol
 filters (ports, PPID, flags) are native ``filter`` expressions, so
 Catalyst prunes frames before any protocol UDF runs and column-prunes
 the struct fields each protocol actually reads.

@@ -11,7 +11,7 @@ actually needs (submit_sm / deliver_sm / data_sm and their _resp
 headers + source/destination C-octet addresses) are decoded by a
 ~40-line parser here, unit-tested against hand-built PDUs.
 
-Plan shape: one mapInPandas over PSH/ACK TCP segments (multi-PDU
+Plan shape: one ``map_rows`` pass over PSH/ACK TCP segments (multi-PDU
 walk emits one row per PDU), then J3 as a window over the
 direction-normalized key — one shuffle, no Python.
 """

@@ -29,8 +29,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import Window
@@ -319,10 +321,12 @@ def _orc_dir(sf_dir: str) -> str:
     path could race between an overwriting writer and a concurrent
     reader; rooting the cache in a mkdtemp() owned by THIS process
     removes the cross-process race, and the fingerprint invalidates
-    within-process reuse if the source changes mid-session."""
+    within-process reuse if the source changes mid-session. The root
+    is removed when the interpreter exits."""
     global _ORC_SESSION_ROOT
     if _ORC_SESSION_ROOT is None:
         _ORC_SESSION_ROOT = tempfile.mkdtemp(prefix="ingestor_etl_spark_orc_")
+        atexit.register(shutil.rmtree, _ORC_SESSION_ROOT, ignore_errors=True)
     from ingestor_etl_spark.catalog import table_path
 
     src = table_path(sf_dir, "documents")

@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from ingestor_etl_spark import capturegen as g
 from ingestor_etl_spark.operators.transactions import tcap_transactions
 from ingestor_etl_spark.protocols.cap import decode_cap, read_tshark_json
-from ingestor_etl_spark.protocols.diameter import correlate_diameter, decode_diameter
+from ingestor_etl_spark.protocols import map_rows
+from ingestor_etl_spark.protocols.diameter import correlate_diameter, decode_diameter, parse_message
 from ingestor_etl_spark.protocols.gsm_map import decode_gsm_map
 from ingestor_etl_spark.protocols.gtp import decode_gtp, enrich_gtp_transactions
 from ingestor_etl_spark.protocols.http_sig import (
@@ -852,53 +853,34 @@ def pcap_tshark_fields(spark, sf_dir):
         ]
     )
 
-    def tcap_fields(batches):
-        import pandas as _pd
+    def tcap_fields(frame_no, tcap_bytes, seg_ref, cg_ssn, cg_digits, cd_ssn, cd_digits):
+        tb = tcap_bytes or b""
+        mess = _MESS_TYPES.get(tb[0]) if tb else None
+        # fragments carry no whole TCAP message — tshark leaves their
+        # tcap fields empty (the reference skips them via the SEGS
+        # column, sigshark.py:443-447)
+        frag = "1" if seg_ref is not None else None
+        otid = dtid = None
+        marks = {"begin": None, "continue": None, "end": None, "abort": None}
+        if frag is None and mess is not None:
+            ot = ber_find(tb, 0x48)
+            dt = ber_find(tb, 0x49)
+            otid = str(_tid(ot)) if ot is not None else None
+            dtid = str(_tid(dt)) if dt is not None else None
+            if mess in marks:
+                marks[mess] = "1"
+        cg = str(cg_ssn) if cg_ssn is not None else None
+        cd = str(cd_ssn) if cd_ssn is not None else None
+        yield (
+            frame_no, cg, cg_digits, cd, cd_digits, frag, otid, dtid,
+            marks["begin"], marks["continue"], marks["end"], marks["abort"],
+        )
 
-        def opt_int_str(v):
-            # Arrow → pandas turns nullable ints into float NaN
-            return str(int(v)) if _pd.notna(v) else None
-
-        def opt_str(v):
-            return v if isinstance(v, str) else None
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                tb = bytes(r.tcap_bytes) if r.tcap_bytes is not None else b""
-                mess = _MESS_TYPES.get(tb[0]) if tb else None
-                # fragments carry no whole TCAP message — tshark
-                # leaves their tcap fields empty (the reference skips
-                # them via the SEGS column, sigshark.py:443-447)
-                frag = "1" if _pd.notna(r.seg_ref) else None
-                otid = dtid = None
-                marks = {"begin": None, "continue": None, "end": None, "abort": None}
-                if frag is None and mess is not None:
-                    ot = ber_find(tb, 0x48)
-                    dt = ber_find(tb, 0x49)
-                    otid = str(_tid(ot)) if ot is not None else None
-                    dtid = str(_tid(dt)) if dt is not None else None
-                    if mess in marks:
-                        marks[mess] = "1"
-                rows.append(
-                    (
-                        int(r.frame_no),
-                        opt_int_str(r.cg_ssn),
-                        opt_str(r.cg_digits),
-                        opt_int_str(r.cd_ssn),
-                        opt_str(r.cd_digits),
-                        frag,
-                        otid,
-                        dtid,
-                        marks["begin"],
-                        marks["continue"],
-                        marks["end"],
-                        marks["abort"],
-                    )
-                )
-            yield _pd.DataFrame(rows, columns=[f.name for f in _TCAP_SCHEMA.fields])
-
-    tcap = sccp.mapInPandas(tcap_fields, _TCAP_SCHEMA)
+    tcap = map_rows(
+        sccp.select("frame_no", "tcap_bytes", "seg_ref", "cg_ssn", "cg_digits", "cd_ssn", "cd_digits"),
+        _TCAP_SCHEMA,
+        tcap_fields,
+    )
 
     # Diameter side: per-chunk header parse → per-frame '-' aggregation
     _DIA_SCHEMA = _T(
@@ -911,36 +893,26 @@ def pcap_tshark_fields(spark, sf_dir):
         ]
     )
 
-    def dia_fields(batches):
-        import pandas as _pd
-
-        from ingestor_etl_spark.protocols.diameter import parse_message
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                buf = bytes(r.payload) if r.payload is not None else b""
-                pos = 0
-                while pos + 20 <= len(buf):
-                    msg, consumed = parse_message(buf[pos:])
-                    if msg is None or consumed <= 0:
-                        break
-                    rows.append(
-                        (
-                            int(r.frame_no),
-                            int(r.sctp_ssn or 0),
-                            "1" if msg["request"] else "0",
-                            str(msg["hop_by_hop_id"]),
-                            str(msg["end_to_end_id"]),
-                        )
-                    )
-                    pos += consumed
-            yield _pd.DataFrame(rows, columns=[f.name for f in _DIA_SCHEMA.fields])
+    def dia_fields(frame_no, sctp_ssn, payload):
+        buf = payload or b""
+        pos = 0
+        while pos + 20 <= len(buf):
+            msg, consumed = parse_message(buf[pos:])
+            if msg is None or consumed <= 0:
+                break
+            yield (
+                frame_no,
+                sctp_ssn or 0,
+                "1" if msg["request"] else "0",
+                str(msg["hop_by_hop_id"]),
+                str(msg["end_to_end_id"]),
+            )
+            pos += consumed
 
     dia_src = l4.where(
         (F.col("src_port") == 3868) | (F.col("dst_port") == 3868)
     ).select("frame_no", "sctp_ssn", "payload")
-    dia = dia_src.mapInPandas(dia_fields, _DIA_SCHEMA)
+    dia = map_rows(dia_src, _DIA_SCHEMA, dia_fields)
 
     def _agg_join(col):
         # tshark -Eaggregator=-: occurrences in chunk order

@@ -6,8 +6,9 @@ record headers (diameter.py:433-452) or walks pcapng blocks
 (diameter.py:489-561) extracting the DLT and the ``if_tsresol``
 option. Here the same byte-level walk runs *inside Spark*: files
 arrive via the built-in ``binaryFile`` source (one row per capture
-file, content as BINARY) and a ``mapInPandas`` generator emits one
-row per frame.
+file, content as BINARY) and ``protocols.map_rows`` runs the walk
+on each file's row, one row out per frame (on Arrow batches; the walk
+sees plain ``bytes``).
 
 Scale design: packet-capture records are not splittable without an
 index, so the unit of parallelism is the FILE — exactly the
@@ -31,7 +32,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ingestor_etl_spark.protocols import map_rows
 
 # Classic-pcap magics (S1). The byte order of the *file header*
 # encodes the writer's endianness; 0xA1B23C4D variants store
@@ -171,16 +173,10 @@ def parse_file_rows(fname: str, content: bytes) -> list[tuple]:
 
 
 def frames_from_files(files: DataFrame) -> DataFrame:
-    """``binaryFile`` rows → frames, one pandas frame per capture
-    file: the parser of both ``read_pcap`` and ``stream_frames``."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                rows = parse_file_rows(fname, bytes(content))
-                yield pd.DataFrame(rows, columns=FRAME_SCHEMA.fieldNames())
-
-    frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
+    """``binaryFile`` rows → frames: the parser of both ``read_pcap``
+    and ``stream_frames``. An Arrow batch of files is bounded by
+    ``spark.sql.files.maxPartitionBytes``."""
+    frames = map_rows(files.select("path", "content"), FRAME_SCHEMA, parse_file_rows)
     return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 

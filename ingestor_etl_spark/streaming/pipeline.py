@@ -91,7 +91,7 @@ def stream_decode_diameter(segments: DataFrame, timeout_ms: int = 60_000) -> Dat
         rows: list[tuple] = []
         # applyInPandasWithState may deliver one key's rows as several
         # Arrow batches; concatenate and sort ONCE so reassembly sees a
-        # globally frame-ordered stream (as the batch _stitch_file does).
+        # globally frame-ordered stream (as the batch stitch_file does).
         chunks = list(pdfs)
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values("frame_no")

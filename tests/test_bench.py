@@ -109,3 +109,28 @@ def test_unknown_flag_exits_before_any_session(flag):
     assert proc.returncode == 2
     assert proc.stdout == ""
     assert "usage" in proc.stderr
+
+
+def test_session_workers_find_the_package_from_any_cwd(tmp_path):
+    """Run from outside the repository with no PYTHONPATH, a bench
+    session's Python workers still import the package: a capture read
+    (one ``map_rows`` pass over the package's frame parser) succeeds."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "\n".join([
+        "import sys",
+        f"sys.path.insert(0, {root!r})",
+        "import bench",
+        "from ingestor_etl_spark import capturegen as g",
+        "from ingestor_etl_spark.sources.pcap import read_pcap",
+        "open('x.pcap', 'wb').write(g.pcap([(1, 0, b'a'), (2, 0, b'b')]))",
+        "spark = bench._session('bench-cwd-test')",
+        "print(read_pcap(spark, 'x.pcap').where('error IS NULL').count())",
+        "spark.stop()",
+    ])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "2"

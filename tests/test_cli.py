@@ -238,7 +238,8 @@ def test_build_pipeline_decodes_once(spark, capture_globs, protocol):
         assert decoded.is_cached
         nodes = _plan_nodes(file_counters(decoded)._jdf.queryExecution().optimizedPlan())
         assert "InMemoryRelation" in nodes, nodes
-        assert not {"MapInPandas", "FlatMapGroupsInPandas", "LogicalRelation"} & set(nodes), nodes
+        python = {"MapInPandas", "FlatMapGroupsInPandas", "MapInArrow", "FlatMapGroupsInArrow"}
+        assert not {*python, "LogicalRelation"} & set(nodes), nodes
     finally:
         release_caches()
 

@@ -120,3 +120,29 @@ def test_orc_roundtrip_preserves_every_row(spark):
 
     got = REGISTRY["orc_ingest"].fn(spark, SF).count()
     assert got == load_table(spark, SF, "documents").count()
+
+
+def test_orc_dir_removed_at_exit(tmp_path):
+    """The per-process ORC cache root of ``orc_ingest`` goes away when
+    its process exits, with whatever the query wrote into it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "\n".join([
+        "import os, sys",
+        f"sys.path.insert(0, {root!r})",
+        "from ingestor_etl_spark.queries.curation_ops import _orc_dir",
+        f"out = _orc_dir({SF!r})",
+        "os.makedirs(out)",
+        "open(os.path.join(out, '_SUCCESS'), 'w').close()",
+        "print(os.path.dirname(out))",
+    ])
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    proc = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    made = proc.stdout.strip().splitlines()[-1]
+    assert made.startswith(str(tmp_path)) and "ingestor_etl_spark_orc_" in made
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []

@@ -129,9 +129,7 @@ def test_stitch_file_matches_per_stream_stitch():
     """Batch decode walks a whole capture file in one group: streams
     interleaved in one file give the messages ``stitch`` gives each
     stream on its own."""
-    import pandas as pd
-
-    from ingestor_etl_spark.protocols.diameter import STREAM_KEY, _stitch_file
+    from ingestor_etl_spark.protocols.diameter import stitch_file
 
     (segs, _), (other, _) = _stitch_segments(), _stitch_segments()
     ccr = _ccr(msisdn="5215550009")
@@ -146,17 +144,15 @@ def test_stitch_file_matches_per_stream_stitch():
             if i < len(stream):
                 frame_no += 1
                 stream[i] = (frame_no, 1000 + frame_no, stream[i][2])
-                rows.append(("f", *key, *stream[i]))
-    pdf = pd.DataFrame(rows[::-1], columns=STREAM_KEY + ["frame_no", "ts_us", "payload"])
-    got = _stitch_file(pdf)
+                rows.append((*key, *stream[i]))
+    got = [("f", *r) for r in stitch_file(rows[::-1])]
     want = [
         ("f", fl, ts_us, key[0], key[1]) + fields
         for key, stream in streams.items()
         for fl, ts_us, fields in stitch(stream)[0]
     ]
     assert len(want) == 9
-    norm = lambda r: tuple(None if v != v else v for v in r)  # noqa: E731 NaN → None
-    assert sorted(map(norm, got.itertuples(index=False)), key=repr) == sorted(map(norm, want), key=repr)
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 @pytest.fixture(scope="module")

@@ -134,6 +134,24 @@ def test_http_pipeline_reassembly_pairing(spark, tmp_path):
     assert resrow.msisdn == "5215550001"
 
 
+def test_http_pipeline_split_response(spark, tmp_path):
+    """A response split over three TCP segments decodes, through the
+    OCS extractor, as one row with its whole body."""
+    req = _http("POST /ocs HTTP/1.1", OCS_XML)
+    res = _http("HTTP/1.1 200 OK", b"<mo-acr-response id=\"7\"><result>0</result></mo-acr-response>")
+    cuts = [0, 30, len(res) - 20, len(res)]
+    frames = [_flow(req, (2200, 0), seq=1000, ack=555)] + [
+        _flow(res[a:b], (2200, 1 + i), seq=555 + a, ack=1000 + len(req), reverse=True)
+        for i, (a, b) in enumerate(zip(cuts, cuts[1:]))
+    ]
+    p = tmp_path / "split.pcap"
+    p.write_bytes(g.pcap(frames))
+    rows = extract_ocs(http_messages(expand_l4(read_pcap(spark, str(p))))).collect()
+    (resrow,) = [r for r in rows if not r.http_is_request]
+    assert list(resrow.frames_list) == [2, 3, 4]
+    assert resrow.type == "mo-acr-response" and resrow.result == 0
+
+
 def test_http_nocontent_and_dialects(spark, tmp_path):
     req = _http("GET /ping HTTP/1.1")  # no Content-Length → noContent
     sms = (
@@ -218,23 +236,48 @@ def test_pair_segments_pipelined_requests_sharing_ack_merge():
 
 
 def test_pair_segments_drops_unclaimed_continuation():
-    rows = [_seg(1, "req", 1000, 555, b"POST /a"), _seg(2, None, 1007, 556, b"stray")]
+    """A continuation joins only the message it continues in sequence
+    on its own 4-tuple: a gap, the reversed flow or no start at all
+    leave it unclaimed."""
+    rows = [
+        _seg(1, "req", 1000, 555, b"POST /a"),
+        _seg(2, None, 1100, 555, b"gap"),
+        _seg(3, None, 1007, 555, b"stray", reverse=True),
+    ]
     assert _groups(rows) == {("req", 555): ([1], b"POST /a")}
     assert pair_segments([_seg(1, None, 1, 2, b"orphan")]) == []
 
 
-def test_pair_segments_request_key_wins_over_response_key():
+def test_pair_segments_continuation_joins_by_sequence_not_key():
     """A continuation whose request key and response key both match a
-    start joins the request, the reference's first dict probe."""
+    start joins neither unless it continues one's bytes; the one at
+    the response start's seq + length joins the response."""
     rows = [
         _seg(1, "req", 1000, 555, b"POST /a"),
         _seg(2, "res", 777, 9, b"HTTP/1.1 200 OK"),  # also client → server
         _seg(3, None, 777, 555, b"BODY"),
+        _seg(4, None, 792, 555, b"TAIL"),
     ]
     assert _groups(rows) == {
-        ("req", 555): ([1, 3], b"POST /aBODY"),
-        ("res", 777): ([2], b"HTTP/1.1 200 OK"),
+        ("req", 555): ([1], b"POST /a"),
+        ("res", 777): ([2, 4], b"HTTP/1.1 200 OKTAIL"),
     }
+
+
+def test_pair_segments_split_response_keeps_whole_body():
+    """A response split over three segments comes back as one message
+    with the whole body, in any row order; its continuations carry
+    their own seq, not the response key's."""
+    req = b"POST /a HTTP/1.1\r\nContent-Length: 0\r\n\r\n"
+    res = b"HTTP/1.1 200 OK\r\nContent-Length: 12\r\n\r\n<mo-acr-ok/>"
+    parts = [res[:20], res[20:41], res[41:]]
+    rows = [_seg(1, "req", 1000, 555, req)]
+    seq = 555
+    for i, part in enumerate(parts):
+        rows.append(_seg(2 + i, "res" if i == 0 else None, seq, 1000 + len(req), part, reverse=True))
+        seq += len(part)
+    for order in (rows, rows[::-1]):
+        assert _groups(order) == {("req", 555): ([1], req), ("res", 555): ([2, 3, 4], res)}
 
 
 def test_pair_segments_request_continuation_beside_its_response():

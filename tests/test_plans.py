@@ -165,7 +165,7 @@ def _formatted(df):
 
 def test_diameter_port_filter_below_stitch(spark, tmp_path):
     """The 3868 port gate must run BEFORE the reassembly shuffle +
-    FlatMapGroupsInPandas stitcher — i.e. appear deeper in the plan
+    FlatMapGroupsInArrow stitcher — i.e. appear deeper in the plan
     tree — so non-Diameter traffic never reaches Python or the wire.
     Pins the decode subtree to exactly one exchange (the stream-key
     groupBy)."""
@@ -180,7 +180,7 @@ def test_diameter_port_filter_below_stitch(spark, tmp_path):
     # Filters mentioning the port back to their tree positions
     port_ids = re.findall(r"\((\d+)\) Filter\nInput.*\nCondition : .*3868", txt)
     assert port_ids, txt
-    stitch = next(i for i, ln in enumerate(tree) if "FlatMapGroupsInPandas" in ln)
+    stitch = next(i for i, ln in enumerate(tree) if "FlatMapGroupsInArrow" in ln)
     positions = [
         next(i for i, ln in enumerate(tree) if f"({pid})" in ln) for pid in port_ids
     ]

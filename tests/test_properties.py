@@ -177,32 +177,18 @@ def test_reassembly_order_invariance(order):
     """Batch reassembly sorts by frame_no before stitching, so any
     arrival permutation of the same segments yields the same
     messages (SURVEY §7.4 order-sensitivity requirement)."""
-    import pandas as pd
-
-    from ingestor_etl_spark.protocols.diameter import _stitch_file
+    from ingestor_etl_spark.protocols.diameter import stitch_file
 
     msg = g.diameter_msg(272, True, 7, 9, [g.diameter_avp(263, b"abcdef")])
     # six 1-byte-overlapping slices of two messages back to back
     stream = msg + g.diameter_msg(272, False, 7, 9, [g.diameter_avp(268, struct.pack("!I", 2001))])
     cuts = [0, 11, 17, 29, 41, 53, len(stream)]
     segs = [(i + 1, stream[cuts[i] : cuts[i + 1]]) for i in range(6)]
-    pdf = pd.DataFrame(
-        {
-            "file": "f",
-            "frame_no": [segs[i][0] for i in order],
-            "ts_us": [1000 + segs[i][0] for i in order],
-            "payload": [segs[i][1] for i in order],
-            "src_ip": "a",
-            "dst_ip": "b",
-            "src_port": 50000,
-            "dst_port": 3868,
-            "sctp_sid": None,
-            "sctp_ssn": None,
-        }
-    )
-    out = _stitch_file(pdf)
+    # STREAM_KEY less file, then frame_no, ts_us, payload
+    rows = [("a", "b", 50000, 3868, None, None, segs[i][0], 1000 + segs[i][0], segs[i][1]) for i in order]
+    out = stitch_file(rows)
     assert len(out) == 2
-    assert sorted(out["request"]) == [False, True]
+    assert sorted(r[4] for r in out) == [False, True]
 
 
 # ---------------------------------------------------------------------------

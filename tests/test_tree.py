@@ -7,7 +7,9 @@ when its name appears outside its own definition as a NAME token or as
 a name inside an f-string expression, so comments and docstrings do
 not count. ``@register``ed queries are reached through the registry
 and are skipped. A definition that only tests call stays only with a
-reason in ``ALLOWED``."""
+reason in ``ALLOWED``.
+
+Also: no module under ``protocols/`` or ``sources/`` imports pandas."""
 
 from __future__ import annotations
 
@@ -106,3 +108,23 @@ def test_every_definition_has_a_caller_or_a_reason():
     # an entry whose definition gained a caller, or is gone, leaves the list
     stale = sorted(set(ALLOWED) - set(uncalled))
     assert not stale, f"ALLOWED entries that have a caller or no definition: {stale}"
+
+
+def _imports_pandas(src: str) -> bool:
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Import) and any(a.name.split(".")[0] == "pandas" for a in node.names):
+            return True
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+            return True
+    return False
+
+
+def test_decode_path_does_not_import_pandas():
+    """Decode walks run on Arrow batches (``protocols.map_rows`` /
+    ``map_files``) and see ``None`` for NULL; no pandas frame sits
+    between a capture and its decoded rows."""
+    pkg = ROOT / "ingestor_etl_spark"
+    files = sorted((pkg / "protocols").rglob("*.py")) + sorted((pkg / "sources").rglob("*.py"))
+    assert files
+    offenders = [str(p.relative_to(ROOT)) for p in files if _imports_pandas(p.read_text())]
+    assert not offenders, offenders
